@@ -9,16 +9,17 @@ filesystem from the path's scheme, so ``file:/``, ``hdfs://`` and
 ``s3a://`` (with the fs.s3a.* session confs from session.s3a_options)
 all behave identically from the caller's point of view.
 
-Caveat for object stores: ``rename`` on S3A is a server-side copy, not
-an atomic metadata operation. The serving table's swap protocol keeps
-the old data aside until the new data is fully in place, so a crash
-mid-rename never loses committed state — but a production deployment
-at 100 TB would put a real table format (Delta/Iceberg/Paimon) behind
-this interface for true atomic commits.
+The serving table commits by snapshot (serving/table.py): immutable
+data files plus a numbered manifest renamed into place only if that
+number is absent. ``rename`` onto an existing file fails on HDFS
+(atomically) and on the local filesystem; on S3A rename is a
+server-side copy and the if-absent check is not atomic, so one writer
+per table is assumed there.
 """
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 
@@ -149,14 +150,25 @@ def read_text(spark: SparkSession, path: str) -> str | None:
     because the destination always wins. A ``.tmp`` written by
     ``write_text_atomic`` is complete by construction (it appears via
     rename from the ``.inprogress`` stage), so the fallback never
-    returns torn content."""
+    returns torn content. A ``.tmp`` that vanishes before it is opened
+    was just renamed onto the destination by a writer: the destination
+    is read again rather than raising."""
+    for candidate in (path, path + ".tmp", path):
+        text = _read_if_present(spark, candidate)
+        if text is not None:
+            return text
+    return None
+
+
+def _read_if_present(spark: SparkSession, path: str) -> str | None:
     fs, p = _fs_path(spark, path)
-    if not fs.exists(p):
-        _, ptmp = _fs_path(spark, path + ".tmp")
-        if not fs.exists(ptmp):
+    try:
+        stream = fs.open(p)
+    except Py4JJavaError as e:
+        missing = spark._jvm.java.lang.Class.forName("java.io.FileNotFoundException")
+        if missing.isInstance(e.java_exception):
             return None
-        p = ptmp
-    stream = fs.open(p)
+        raise
     jvm = spark._jvm
     baos = jvm.java.io.ByteArrayOutputStream()
     jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, baos, 4096, True)

@@ -11,26 +11,37 @@ commit-after-index (KafkaIngestor.java:204-230).
 
 Scale design (100 TB): with ``num_buckets`` set the table is laid out
 as hash-bucket partitions (``__bucket = pmod(hash(key), N)``) and a
-micro-batch rewrites ONLY the buckets containing changed keys — the
-read side partition-prunes to those buckets and the swap moves just
-their directories, so per-batch cost is O(touched buckets), not
-O(table). ``num_buckets=0`` keeps the simple full rewrite for small
-tables.
+micro-batch rewrites ONLY the buckets containing changed keys, so
+per-batch cost is O(touched buckets), not O(table).
+``num_buckets=0`` keeps the simple full rewrite for small tables.
 
-Commit protocol (both paths): new data is staged to a sibling
-directory, then swapped in with the old data kept aside until the new
-data is fully in place — the same no-commit-until-complete barrier as
-the reference's InFlightBatch (InFlightBatch.java:27-113). A crash
-mid-swap never loses committed state: full-rewrite recovery restores
-the kept-aside table; bucket-swap recovery first renames back any
-bucket caught between its two renames (the kept-aside dir holds that
-bucket's ONLY copy — replaying the changelog could not restore keys
-absent from it), then the replayed micro-batch converges the rest
-(the streaming checkpoint only advances after a successful batch, and
-the merge is idempotent — the same redelivery semantics as
-PaimonIngestor.java:354-368).
+Commit protocol: Paimon-style numbered snapshots (PaimonIngestor.java:
+269-276).
 
-All directory manipulation goes through the Hadoop FileSystem API
+- Data files are immutable and uniquely named (Spark's per-job file
+  names), under ``{path}/__bucket=b/`` (``{path}/`` when unbucketed).
+- Commit N+1 writes ``{path}/_snapshots/N+1.json`` — the live files
+  per bucket, the data schema and the commit record — to a temp name
+  and renames it into place only if N+1 is absent. That rename is the
+  commit: before it the new files are invisible, after it they are
+  the table. ``_snapshots/LATEST`` is a hint a reader starts from.
+- A reader pins the newest snapshot and scans its explicit file list
+  under its schema: no directory listing, no recovery, no writes. A
+  crashed writer leaves only files no snapshot references, or a temp
+  snapshot no reader opens.
+- Each commit deletes the files on disk that the snapshot it builds
+  on does not reference: crash leftovers, and files replaced before
+  that snapshot. It looks only in the buckets it rewrites and those
+  the previous commit replaced. The previous snapshot's files stay
+  until the next commit, so a reader that pinned it still finds them.
+- A directory holding data but no ``_snapshots/`` (a table written
+  before snapshot commits) is refused by the first commit, not
+  cleaned.
+
+One writer per table is assumed. HDFS refuses a rename onto an
+existing file and the local filesystem checks before it renames; on
+S3A rename is a copy, so the if-absent guard is not atomic there.
+All file operations go through the Hadoop FileSystem API
 (platypus_ingestion_plugins_spark.fs), so ``path`` may be local,
 ``hdfs://`` or ``s3a://`` (reference parity: S3ALoader.java:32-89).
 """
@@ -42,16 +53,12 @@ import json
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.errors import AnalysisException
 
 from platypus_ingestion_plugins_spark import fs
 from platypus_ingestion_plugins_spark.operators.cdc import apply_changelog
 
 BUCKET_COL = "__bucket"
-
-# marker file written into the kept-aside dir by a PARTIAL bucket swap;
-# its absence means the kept-aside dir is a full-rewrite's stale copy
-SWAP_MARKER = "_PARTIAL_BUCKET_SWAP"
+SNAPSHOT_DIR = "_snapshots"
 
 
 class ServingTable:
@@ -72,101 +79,93 @@ class ServingTable:
         # reference parity (IngestionConfig.autoRegisterFields,
         # default FALSE there): with auto-register ON (our default —
         # schema evolution is the lakehouse norm) a batch carrying new
-        # columns widens the table; with it OFF the registered sidecar
-        # schema is a CONTRACT and an unknown column is an ingest
-        # error, caught before any data lands
+        # columns widens the table; with it OFF the snapshot's schema
+        # is a CONTRACT and an unknown column is an ingest error,
+        # caught before any data lands
         self.auto_register_fields = auto_register_fields
-
-    @property
-    def _staging(self) -> str:
-        return self.path + "__staging"
-
-    @property
-    def _old(self) -> str:
-        return self.path + "__old"
+        self._frame: tuple[dict, DataFrame] | None = None  # (snapshot, its frame)
 
     def _bucket_col(self) -> Column:
         return F.pmod(F.hash(*[F.col(k) for k in self.key]), F.lit(self.num_buckets))
 
-    def _recover(self) -> None:
-        """Repair any interrupted swap before touching the table.
+    def _snapshot_file(self, n: int) -> str:
+        return f"{self.path}/{SNAPSHOT_DIR}/{n}.json"
 
-        - table missing but kept-aside copy present -> crash between
-          the two renames of a full-rewrite swap: restore the copy.
-        - both present, kept-aside dir carries the partial-swap marker
-          -> a bucket swap died mid-flight: any ``__bucket=*`` under it
-          whose live directory is MISSING was between its two renames,
-          and the kept-aside copy is the only copy of that bucket's
-          committed rows — rename it back before dropping the rest.
-          (Replaying the micro-batch cannot restore keys absent from
-          the changelog, so discarding it would lose them for good.)
-        - both present, no marker -> a full-rewrite swap completed but
-          cleanup didn't: the copy is entirely stale, drop it. (No
-          per-bucket restore here: a full rewrite may legitimately
-          drop a bucket whose keys were all deleted.)
-        - leftover staging is always discarded (never committed).
-        """
-        if fs.exists(self.spark, self._old):
-            if not fs.exists(self.spark, self.path):
-                fs._rename_or_raise(self.spark, self._old, self.path)
-            else:
-                names = fs.list_names(self.spark, self._old)
-                if SWAP_MARKER in names:
-                    for n in names:
-                        if n.startswith(f"{BUCKET_COL}=") and not fs.exists(
-                            self.spark, f"{self.path}/{n}"
-                        ):
-                            fs._rename_or_raise(
-                                self.spark, f"{self._old}/{n}", f"{self.path}/{n}"
-                            )
-                fs.delete(self.spark, self._old)
-        fs.delete(self.spark, self._staging)
+    @property
+    def _hint(self) -> str:
+        return f"{self.path}/{SNAPSHOT_DIR}/LATEST"
+
+    def _dir(self, d: str) -> str:
+        """A snapshot directory key ("" is the table root) as a path."""
+        return f"{self.path}/{d}" if d else self.path
+
+    def _parquet_names(self, d: str) -> set[str]:
+        return {n for n in fs.list_names(self.spark, self._dir(d)) if n.endswith(".parquet")}
+
+    def _latest(self) -> dict | None:
+        """The newest snapshot, or None for a table never committed.
+        Starts at the LATEST hint and steps forward while a newer
+        snapshot exists. A snapshot gone before it is read was expired
+        by a concurrent commit, which moved the hint on first: start
+        over from the new hint. If the hint has not moved, the snapshot
+        is missing for good."""
+        hint = fs.read_text(self.spark, self._hint)
+        while True:
+            n = int(hint) if hint else 0
+            while fs.exists(self.spark, self._snapshot_file(n + 1)):
+                n += 1
+            if n == 0:
+                return None
+            raw = fs.read_text(self.spark, self._snapshot_file(n))
+            if raw is not None:
+                return json.loads(raw)
+            seen, hint = hint, fs.read_text(self.spark, self._hint)
+            if hint == seen:
+                raise FileNotFoundError(f"serving table {self.path}: snapshot {n} is missing")
 
     def exists(self) -> bool:
-        self._recover()
-        names = fs.list_names(self.spark, self.path)
-        return "_SUCCESS" in names or any(
-            n.endswith(".parquet") or n.startswith(f"{BUCKET_COL}=") for n in names
-        )
+        return self._latest() is not None
 
-    def _log_commit(self, kind: str, n_rows: int, buckets: list[int] | None) -> None:
-        """Append a commit record to the table's `_commits.json` —
-        the audit surface Paimon gives via snapshot metadata
-        (PaimonIngestor.java:269-276): what committed, how many rows,
-        which buckets moved. Kept to the last 1000 entries (the log is
-        for operators and idempotence debugging, not lineage). The
-        read-modify-write lands via stage-and-rename so a crash
-        mid-update never leaves a torn, unparseable log."""
-        log_path = f"{self.path}/_commits.json"
-        raw = fs.read_text(self.spark, log_path)
-        entries = json.loads(raw) if raw else []
-        entries.append(
-            {
-                "commit_id": (entries[-1]["commit_id"] + 1) if entries else 0,
-                "kind": kind,
-                "n_rows": n_rows,
-                "buckets": buckets,
-            }
-        )
-        fs.write_text_atomic(self.spark, log_path, json.dumps(entries[-1000:]))
+    def read(self, snapshot: dict | None = None) -> DataFrame | None:
+        """The rows of ``snapshot`` (default: the newest; None for a
+        table never committed), read under its schema: after
+        add-column evolution older files read NULL for the new
+        columns, and a snapshot with no files is an empty frame. The
+        frame is reused while the snapshot is unchanged (its files are
+        immutable): Spark resolving a read of named files costs more,
+        and varies more, than planning a query on it."""
+        snap = snapshot or self._latest()
+        if snap is None:
+            return None
+        frame = self._frame
+        if frame is None or frame[0] != snap:
+            schema = T.StructType.fromJson(snap["schema"])
+            if snap["num_buckets"]:
+                schema = schema.add(BUCKET_COL, T.IntegerType())
+            paths = [f"{self._dir(d)}/{n}" for d, names in sorted(snap["files"].items()) for n in names]
+            reader = self.spark.read.schema(schema).option("basePath", self.path)
+            df = reader.parquet(*paths) if paths else self.spark.createDataFrame([], schema)
+            frame = self._frame = (snap, df)
+        return frame[1]
 
     def commits(self) -> list[dict]:
-        """The commit log (oldest first); empty for a fresh table."""
+        """The commit log (oldest first); empty for a fresh table.
+        ``_commits.json`` holds the last 1000 ``{commit_id, kind,
+        n_rows, buckets}`` records — the audit surface Paimon gives via
+        snapshot metadata — and is written after each snapshot; no
+        read depends on it."""
         raw = fs.read_text(self.spark, f"{self.path}/_commits.json")
         return json.loads(raw) if raw else []
 
-    def _check_registered_fields(self, changelog: DataFrame) -> None:
+    def _check_registered_fields(self, changelog: DataFrame, snap: dict | None) -> None:
         """auto_register_fields=False contract: a changelog column
-        absent from the registered sidecar schema (ignoring CDC
+        absent from the latest snapshot's schema (ignoring CDC
         bookkeeping columns) is an error, raised BEFORE any merge work
         or data lands — mirroring the reference's refusal to index
         unregistered fields when auto-registration is off."""
-        if self.auto_register_fields:
-            return
-        schema_json = fs.read_text(self.spark, f"{self.path}/_schema.json")
-        if schema_json is None:
-            return  # first-ever batch REGISTERS the schema
-        known = {f.name for f in T.StructType.fromJson(json.loads(schema_json))}
+        if self.auto_register_fields or snap is None:
+            return  # the first-ever batch REGISTERS the schema
+        known = {f["name"] for f in snap["schema"]["fields"]}
         internal = {BUCKET_COL, "_row_kind", "_seq", "_is_poison", "_snapshot"}
         unknown = sorted(set(changelog.columns) - known - internal)
         if unknown:
@@ -176,77 +175,126 @@ class ServingTable:
                 f"{sorted(known)}"
             )
 
-    def _write_schema(self, schema: T.StructType, at: str | None = None) -> None:
-        """Persist the data schema so a fully-emptied table (every key
-        deleted -> zero parquet files) stays readable. ``at`` targets
-        the staging dir so a full rewrite swaps in a complete table."""
-        data_fields = [f for f in schema.fields if f.name != BUCKET_COL]
-        fs.write_text_atomic(
-            self.spark,
-            f"{at or self.path}/_schema.json",
-            json.dumps(T.StructType(data_fields).jsonValue()),
-        )
-
-    def read(self) -> DataFrame | None:
-        if not self.exists():
-            return None
-        # read under the persisted table schema (written on every
-        # commit): after add-column evolution, untouched bucket files
-        # still carry the OLD footer — an explicit schema makes them
-        # read NULL for new columns instead of depending on which
-        # footer parquet inference happens to pick. Also keeps a
-        # fully-emptied table (zero data files) readable.
-        schema_json = fs.read_text(self.spark, f"{self.path}/_schema.json")
-        if schema_json is not None:
-            data_schema = T.StructType.fromJson(json.loads(schema_json))
-            full = data_schema
-            if self.num_buckets:
-                full = T.StructType(
-                    list(data_schema.fields)
-                    + [T.StructField(BUCKET_COL, T.IntegerType())]
-                )
-            try:
-                return self.spark.read.schema(full).parquet(self.path)
-            except AnalysisException:
-                return self.spark.createDataFrame([], data_schema)
-        return self.spark.read.parquet(self.path)
-
-    def overwrite(self, df: DataFrame, _log: bool = True) -> None:
-        """Full rewrite via stage-then-swap; the old table is kept
-        aside until the new one is in place (crash-recoverable)."""
-        self._recover()
-        if self.num_buckets:
-            (
-                df.withColumn(BUCKET_COL, self._bucket_col())
-                .write.mode("overwrite")
-                .partitionBy(BUCKET_COL)
-                .parquet(self._staging)
+    def _claim(self, root: list[str]) -> None:
+        """Before a table's first commit: refuse a directory that holds
+        data but no ``_snapshots/`` (a table from before snapshot
+        commits, or plain parquet) — the commit would delete its files
+        as garbage. Then create ``_snapshots/``, which marks whatever a
+        crash of this commit leaves behind as the table's own."""
+        if SNAPSHOT_DIR not in root and any(
+            n.endswith(".parquet")
+            or n.startswith(f"{BUCKET_COL}=")
+            or n in ("_SUCCESS", "_schema.json", "_commits.json")
+            for n in root
+        ):
+            raise IOError(
+                f"{self.path} holds data but no snapshot: a table written "
+                "before snapshot commits must be migrated (rewrite it "
+                "through overwrite() at a new path)"
             )
+        fs.mkdirs(self.spark, f"{self.path}/{SNAPSHOT_DIR}")
+
+    def _commit(
+        self,
+        snap: dict | None,
+        df: DataFrame,
+        buckets: list[int] | None,
+        kind: str,
+        n_rows: int,
+    ) -> None:
+        """The one commit path: write ``df`` as new files replacing
+        ``buckets`` (None: the whole table) of ``snap``, then publish
+        snapshot N+1 and append the commit record to the log.
+
+        Garbage is the parquet on disk that ``snap`` does not reference:
+        the files the commit that made ``snap`` replaced, and a crashed
+        commit's leftovers. It is deleted after the write, so a reader
+        pinned to the snapshot before ``snap`` has the whole write to
+        finish. Only the directories this commit rewrites and those
+        ``snap``'s commit replaced are listed (all when either is the
+        whole table): leftovers elsewhere are never read and go when
+        their bucket is next rewritten. The listing before the write
+        tells this commit's new files apart from leftovers."""
+        if self.num_buckets:
+            ids = range(self.num_buckets) if buckets is None else buckets
+            dirs = [f"{BUCKET_COL}={b}" for b in ids]
         else:
-            df.write.mode("overwrite").parquet(self._staging)
-        # the swap replaces the whole directory: stage the schema sidecar
-        # and carried-over commit log INTO the staging dir, so the
-        # directory renamed into place is already complete — a crash
-        # right after the swap can't leave a table whose read() falls
-        # back to (possibly stale) parquet footer inference or whose
-        # commit log vanished
-        prev_log = fs.read_text(self.spark, f"{self.path}/_commits.json")
-        self._write_schema(df.schema, at=self._staging)
-        if prev_log is not None:
-            fs.write_text(self.spark, f"{self._staging}/_commits.json", prev_log)
-        if fs.exists(self.spark, self.path):
-            fs._rename_or_raise(self.spark, self.path, self._old)
-        fs._rename_or_raise(self.spark, self._staging, self.path)
-        fs.delete(self.spark, self._old)
-        if _log:
-            self._log_commit("overwrite", -1, None)
+            dirs = [""]
+        live = snap["files"] if snap else {}
+        replaced = snap["commit"]["buckets"] if snap else None
+        if buckets is None or replaced is None:
+            root = fs.list_names(self.spark, self.path)
+            if snap is None:
+                self._claim(root)
+            on_disk = {"": {n for n in root if n.endswith(".parquet")}}
+            scan = [n for n in root if n.startswith(f"{BUCKET_COL}=")]
+        else:
+            on_disk = {}
+            scan = sorted(set(dirs) | {f"{BUCKET_COL}={b}" for b in replaced})
+        on_disk.update((d, self._parquet_names(d)) for d in scan)
+        # a crashed Spark write's task output: the next append's job
+        # commit would otherwise move it into the bucket directories
+        fs.delete(self.spark, f"{self.path}/_temporary")
+
+        if self.num_buckets:
+            df = df.withColumn(BUCKET_COL, self._bucket_col())  # replaces a scanned one
+            df.write.mode("append").partitionBy(BUCKET_COL).parquet(self.path)
+        else:
+            df.drop(BUCKET_COL).write.mode("append").parquet(self.path)
+
+        files = {} if buckets is None else {d: f for d, f in live.items() if d not in dirs}
+        for d in dirs:
+            new = self._parquet_names(d) - on_disk.get(d, set())
+            if new:
+                files[d] = sorted(new)
+        for d, names in on_disk.items():
+            for name in sorted(names - set(live.get(d, ()))):
+                fs.delete(self.spark, f"{self._dir(d)}/{name}")
+
+        log_path = f"{self.path}/_commits.json"
+        raw = fs.read_text(self.spark, log_path)
+        entries = json.loads(raw) if raw else []
+        record = {
+            "commit_id": (entries[-1]["commit_id"] + 1) if entries else 0,
+            "kind": kind,
+            "n_rows": n_rows,
+            "buckets": buckets,
+        }
+        n = (snap["id"] if snap else 0) + 1
+        data_schema = T.StructType([f for f in df.schema.fields if f.name != BUCKET_COL])
+        tmp = self._snapshot_file(n) + ".tmp"
+        fs.write_text(
+            self.spark,
+            tmp,
+            json.dumps(
+                {
+                    "id": n,
+                    "num_buckets": self.num_buckets,
+                    "schema": data_schema.jsonValue(),
+                    "files": files,
+                    "commit": record,
+                }
+            ),
+        )
+        if not fs.rename(self.spark, tmp, self._snapshot_file(n)):
+            raise IOError(f"{self.path}: snapshot {n} already exists (concurrent writer?)")
+        fs.write_text_atomic(self.spark, self._hint, str(n))
+        if n > 2:  # snapshot n-2's files were deleted above; so goes its manifest
+            fs.delete(self.spark, self._snapshot_file(n - 2))
+        entries.append(record)
+        fs.write_text_atomic(self.spark, log_path, json.dumps(entries[-1000:]))
+
+    def overwrite(self, df: DataFrame) -> None:
+        """Full rewrite: one commit whose snapshot lists only ``df``'s
+        files."""
+        self._commit(self._latest(), df, None, "overwrite", -1)
 
     def apply_batch(self, changelog: DataFrame) -> None:
         """Apply one CDC micro-batch: last-wins + merge + commit.
 
         Bucketed tables rewrite only the hash-bucket partitions whose
-        keys appear in the changelog; untouched bucket directories are
-        not read, rewritten, or moved.
+        keys appear in the changelog; untouched buckets keep their
+        files and are not read or rewritten.
 
         On the bucketed (scale) path the commit log's row count rides
         the SAME aggregate action that finds the touched buckets — a
@@ -257,14 +305,14 @@ class ServingTable:
         DataFrame belongs to a cloned SparkSession whose listener bus
         never delivers the observation, so ``Observation.get`` blocks
         forever — don't reintroduce it.)"""
-        self._check_registered_fields(changelog)
-        current = self.read()
-        if current is None or not self.num_buckets:
-            if current is not None and BUCKET_COL in current.columns:
+        snap = self._latest()
+        self._check_registered_fields(changelog, snap)
+        current = self.read(snap) if snap else None
+        if current is None or not self.num_buckets or snap["num_buckets"] != self.num_buckets:
+            if current is not None:
                 current = current.drop(BUCKET_COL)
             merged = apply_changelog(changelog, self.key, target=current)
-            self.overwrite(merged, _log=False)
-            self._log_commit("batch", changelog.count(), None)
+            self._commit(snap, merged, None, "batch", changelog.count())
             return
 
         # buckets touched by this batch (bounded by num_buckets, tiny),
@@ -274,114 +322,51 @@ class ServingTable:
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         )
-        n_rows = sum(r["n"] for r in per_bucket)
         changed = sorted(r["b"] for r in per_bucket)
         if not changed:
             return
-        if BUCKET_COL in current.columns:
-            target = (
-                current.filter(F.col(BUCKET_COL).isin(changed))  # partition-pruned scan
-                .drop(BUCKET_COL)
-            )
-        else:
-            target = current  # empty-table fallback (no bucket dirs on disk)
+        target = current.filter(F.col(BUCKET_COL).isin(changed)).drop(BUCKET_COL)  # pruned scan
         merged = apply_changelog(changelog, self.key, target=target)
-        (
-            merged.withColumn(BUCKET_COL, self._bucket_col())
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(self._staging)
-        )
-        # schema sidecar BEFORE the swap: widening first is safe (old
-        # bucket files read NULL for a new column), whereas sidecar-after
-        # leaves a crash window where an evolved column is invisible to
-        # read() and a later full rewrite would drop it physically
-        self._write_schema(merged.schema)
-        self._swap_buckets(changed)
-        self._log_commit("batch", n_rows, changed)
-
-    def _swap_buckets(self, buckets: list[int]) -> None:
-        """Per-bucket swap: old dir aside -> staged dir in -> drop old.
-
-        The marker goes in BEFORE the first rename so _recover can tell
-        this kept-aside dir apart from a full rewrite's stale copy and
-        restore any bucket caught between its two renames.
-
-        Every rename's boolean result is CHECKED: Hadoop
-        FileSystem.rename reports failure by returning false, and
-        proceeding past one would delete the staging dir holding the
-        only copy of a bucket's merged batch while the commit logs
-        success. A raise here leaves marker + staging in place, which
-        _recover and a replay handle."""
-        fs.delete(self.spark, self._old)
-        fs.mkdirs(self.spark, self._old)
-        fs.write_text(self.spark, f"{self._old}/{SWAP_MARKER}", "")
-        for b in buckets:
-            part = f"{BUCKET_COL}={b}"
-            live = f"{self.path}/{part}"
-            staged = f"{self._staging}/{part}"
-            if fs.exists(self.spark, live):
-                fs._rename_or_raise(self.spark, live, f"{self._old}/{part}")
-            if fs.exists(self.spark, staged):
-                fs._rename_or_raise(self.spark, staged, live)
-        fs.delete(self.spark, self._old)
-        fs.delete(self.spark, self._staging)
+        self._commit(snap, merged, changed, "batch", sum(r["n"] for r in per_bucket))
 
     def compact(self, max_files_per_bucket: int = 4) -> list[int]:
-        """Small-file compaction: rewrite oversized bucket directories
-        down to one parquet file each.
+        """Small-file compaction: rewrite buckets holding more than
+        ``max_files_per_bucket`` files in the latest snapshot down to
+        one parquet file each, through the same commit as apply_batch.
 
         Every micro-batch write fans a bucket's rows across its shuffle
         tasks, so a hot bucket accumulates up to #tasks files per
-        rewrite; query-side scan cost and file-listing latency grow with
-        file count, not data size (the classic streaming-sink pathology
-        at scale — the reference delegates this to Paimon's own
-        compaction). Only buckets whose parquet-file count exceeds
-        ``max_files_per_bucket`` are rewritten, through the same
-        stage-then-swap barrier as apply_batch, so a crash mid-compaction
-        is recoverable and readers never see a partial bucket. Returns
+        rewrite; query-side scan cost grows with file count, not data
+        size (the classic streaming-sink pathology at scale — the
+        reference delegates this to Paimon's own compaction). Returns
         the bucket ids compacted.
 
         Unbucketed tables compact to a single file via the full-rewrite
-        path when the table directory is oversized.
+        path when the table holds too many files.
         """
-        if not self.exists():
+        snap = self._latest()
+        if snap is None:
             return []
         if not self.num_buckets:
-            n_files = sum(
-                1 for n in fs.list_names(self.spark, self.path) if n.endswith(".parquet")
-            )
-            if n_files <= max_files_per_bucket:
+            if len(snap["files"].get("", [])) <= max_files_per_bucket:
                 return []
             self.overwrite(self.query().coalesce(1))
             return [0]
-
-        oversized = []
-        for name in fs.list_names(self.spark, self.path):
-            if not name.startswith(f"{BUCKET_COL}="):
-                continue
-            b = int(name.split("=", 1)[1])
-            files = fs.list_names(self.spark, f"{self.path}/{name}")
-            if sum(1 for f in files if f.endswith(".parquet")) > max_files_per_bucket:
-                oversized.append(b)
+        oversized = sorted(
+            int(d.split("=", 1)[1])
+            for d, names in snap["files"].items()
+            if d.startswith(f"{BUCKET_COL}=") and len(names) > max_files_per_bucket
+        )
         if not oversized:
             return []
-        # read() pins the persisted sidecar schema: after add-column
-        # evolution a bucket holds files with OLD footers, and raw
-        # parquet inference picking one would rewrite the bucket
-        # without the evolved column — silently destroying its values
-        current = self.read()
         # one shuffle partition per bucket -> exactly one output file each
-        (
-            current.filter(F.col(BUCKET_COL).isin(oversized))
+        rows = (
+            self.read(snap)
+            .filter(F.col(BUCKET_COL).isin(oversized))
             .repartition(len(oversized), F.col(BUCKET_COL))
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(self._staging)
         )
-        self._swap_buckets(sorted(oversized))
-        self._log_commit("compact", -1, sorted(oversized))
-        return sorted(oversized)
+        self._commit(snap, rows, oversized, "compact", -1)
+        return oversized
 
     def query(self) -> DataFrame:
         df = self.read()
@@ -394,7 +379,7 @@ class ServingTable:
     def lookup(self, *key_values) -> DataFrame:
         """Point lookup by key: on a bucketed table the key's bucket is
         computed at plan time, so the scan partition-prunes to ONE
-        bucket directory (~1/num_buckets of the files) — the serving
+        bucket's files (~1/num_buckets of the files) — the serving
         layer's Q3 term query at its cheapest. Falls back to a plain
         filter on unbucketed tables."""
         if len(key_values) != len(self.key):
@@ -457,9 +442,9 @@ def update_by_query(
     changelog = upd.withColumn("_row_kind", F.lit("+U")).withColumn(
         "_seq", F.monotonically_increasing_id()
     )
-    # the changelog is derived from the very files apply_batch swaps
-    # out — pin it (lineage-free) BEFORE the apply, or the commit
-    # log's post-swap count re-reads deleted files
+    # the changelog is derived from the very files apply_batch replaces
+    # and apply_batch evaluates it more than once — pin it
+    # (lineage-free) BEFORE the apply so every pass sees the same rows
     changelog = changelog.localCheckpoint(eager=True)
     n = changelog.count()
     if n:

@@ -67,6 +67,20 @@ def apply_s3a(spark: SparkSession, options: dict[str, str]) -> None:
         hconf.set(k.removeprefix("spark.hadoop."), v)
 
 
+def _driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else half of the host's
+    ``MemTotal`` capped at 16g (16g where meminfo is unreadable): a
+    heap the host cannot back is a bug, not a default."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    try:
+        with open(meminfo) as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "16g"
+    return f"{min(kb // 2048, 16 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "platypus_spark",
     shuffle_partitions: int | None = None,
@@ -96,7 +110,10 @@ def get_spark(
         # Spark rejects by default; read them as raw nanosecond longs
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_memory())
+        # a serving-table read names its snapshot's files explicitly;
+        # past the default 32 paths Spark would list them in a job
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
     )
     for k, v in (extra_confs or {}).items():
         builder = builder.config(k, v)

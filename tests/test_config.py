@@ -11,6 +11,7 @@ from platypus_ingestion_plugins_spark.config import (
     PaimonIngestionConfig,
     config_get,
 )
+from platypus_ingestion_plugins_spark.serving.table import ServingTable
 
 CDC_SCHEMA = T.StructType(
     [
@@ -116,7 +117,10 @@ def test_paimon_config_drives_pipeline_end_to_end(spark, tmp_path):
     drop((1, "+I", "a", "v1"), (2, "+I", "b", "v1"))
     pipe = cfg.build_pipeline(spark, CDC_SCHEMA)
     pipe.run_available()
-    table = spark.read.parquet(cfg.index_path())
+    # the index is a snapshot table: replaced files stay on disk for
+    # pinned readers, so it is read through its latest snapshot
+    index = ServingTable(spark, cfg.index_path(), key="id")
+    table = index.query()
     assert "tmp_internal" not in table.columns  # prefix drop applied
     assert "id" in table.columns  # rename applied
     got = {r.id: r.title for r in table.collect()}
@@ -124,7 +128,7 @@ def test_paimon_config_drives_pipeline_end_to_end(spark, tmp_path):
 
     drop((3, "+U", "a", "v2"), (4, "-D", "b", "v1"))
     pipe.run_available()
-    got = {r.id: r.title for r in spark.read.parquet(cfg.index_path()).collect()}
+    got = {r.id: r.title for r in index.query().collect()}
     assert got == {"a": "v2"}
 
 

@@ -1,11 +1,18 @@
-"""ServingTable: bucketed partial rewrite, crash-safe swap, FS shim.
+"""ServingTable: bucketed partial rewrite, snapshot commits, FS shim.
 
-Covers the InFlightBatch-style commit barrier (InFlightBatch.java:27-113)
-and the O(touched-buckets) merge the reference gets from per-bucket
-processing (PaimonIngestor.java:661-712)."""
+Covers the snapshot commit (a crashed writer leaves only files no
+snapshot references; reads never write), the InFlightBatch-style
+no-commit-until-complete barrier (InFlightBatch.java:27-113) and the
+O(touched-buckets) merge the reference gets from per-bucket processing
+(PaimonIngestor.java:661-712)."""
 
 import hashlib
 import os
+import random
+import threading
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from pyspark.sql import Row
 from pyspark.sql import types as T
@@ -41,6 +48,15 @@ def _dir_digest(path):
             with open(p, "rb") as f:
                 h.update(f.read())
     return h.hexdigest()
+
+
+def _parquet_in(d):
+    return sorted(n for n in os.listdir(d) if n.endswith(".parquet")) if os.path.isdir(d) else []
+
+
+def _plant_parquet(path, **cols):
+    """A data file a crashed writer could have left behind."""
+    pq.write_table(pa.table({k: pa.array(v) for k, v in cols.items()}), path)
 
 
 def _bucket_of(spark, table, key):
@@ -84,9 +100,9 @@ def test_partial_rewrite_leaves_untouched_buckets_bitwise_identical(spark, tmp_p
     state = {r.id: r.title for r in tbl.query().collect()}
     assert state[target] == "v2"
     assert len(state) == 32
-    # no staging/old residue after a committed batch
-    assert not fs.exists(spark, path + "__staging")
-    assert not fs.exists(spark, path + "__old")
+    # no write-job or temp-snapshot residue after a committed batch
+    assert not os.path.exists(os.path.join(path, "_temporary"))
+    assert not [n for n in os.listdir(os.path.join(path, "_snapshots")) if ".tmp" in n]
 
 
 def test_partial_rewrite_drops_emptied_bucket_dir(spark, tmp_path):
@@ -97,77 +113,89 @@ def test_partial_rewrite_drops_emptied_bucket_dir(spark, tmp_path):
     assert os.path.isdir(os.path.join(path, f"{BUCKET_COL}={b}"))
 
     tbl.apply_batch(_batch(spark, (2, "-D", "only", "v1")))
-    assert not os.path.exists(os.path.join(path, f"{BUCKET_COL}={b}"))
+    assert f"{BUCKET_COL}={b}" not in tbl._latest()["files"]
     assert tbl.query().count() == 0
+    # the emptied bucket's file served the previous snapshot; the next
+    # commit deletes it
+    tbl.apply_batch(_batch(spark, (3, "-D", "only", "v1")))
+    assert _parquet_in(os.path.join(path, f"{BUCKET_COL}={b}")) == []
 
 
 def test_full_rewrite_crash_between_renames_recovers(spark, tmp_path):
+    """A full rewrite that crashed after its data files landed but
+    before its snapshot rename: readers never see those files or the
+    temp snapshot, and the next commit deletes both."""
     path = str(tmp_path / "serving")
     tbl = ServingTable(spark, path, key="id")
     tbl.apply_batch(_batch(spark, (1, "+I", "a", "v1")))
 
-    # simulate a crash after `path -> path__old` but before
-    # `staging -> path`: the table dir is gone, only the kept-aside
-    # copy remains
-    os.rename(path, path + "__old")
-    assert not os.path.exists(path)
+    crashed = os.path.join(path, "part-99999-crashed.snappy.parquet")
+    _plant_parquet(crashed, id=["a", "z"], title=["torn", "torn"])
+    tmp_snap = os.path.join(path, "_snapshots", "2.json.tmp")
+    with open(tmp_snap, "w") as f:
+        f.write('{"id": 2, "fil')
 
     state = {r.id: r.title for r in tbl.query().collect()}
     assert state == {"a": "v1"}
-    assert not os.path.exists(path + "__old")
+
+    tbl.apply_batch(_batch(spark, (2, "+I", "b", "v1")))
+    assert {r.id: r.title for r in tbl.query().collect()} == {"a": "v1", "b": "v1"}
+    assert not os.path.exists(crashed)
+    assert not os.path.exists(tmp_snap)
 
 
 def test_bucket_swap_crash_mid_swap_restores_bucket(spark, tmp_path):
-    """A crash BETWEEN the two renames of one bucket's swap leaves that
-    bucket's only copy under the kept-aside dir. Recovery must rename
-    it back — deleting it would permanently lose every key in the
-    bucket that the (replayable) changelog doesn't mention."""
-    from platypus_ingestion_plugins_spark.serving.table import SWAP_MARKER
-
+    """A bucketed commit that crashed mid-write: one new file already in
+    the bucket directory, more still under Spark's ``_temporary``, no
+    snapshot. Every committed key stays readable with its committed
+    value, the replayed batch converges, and the commit after it
+    deletes the leftovers instead of adopting them."""
     path = str(tmp_path / "serving")
     tbl = ServingTable(spark, path, key="id", num_buckets=8)
     keys = [f"k{i}" for i in range(32)]
     tbl.apply_batch(_batch(spark, *[(i, "+I", k, "v1") for i, k in enumerate(keys)]))
 
-    b = _bucket_of(spark, tbl, "k0")
-    part = f"{BUCKET_COL}={b}"
-    # simulate _swap_buckets dying after `live -> __old/part` and before
-    # `staged -> live`: marker + the moved bucket under __old, staged
-    # replacement still in __staging
-    os.makedirs(path + "__old")
-    with open(os.path.join(path + "__old", SWAP_MARKER), "w"):
-        pass
-    os.rename(os.path.join(path, part), os.path.join(path + "__old", part))
-    os.makedirs(path + "__staging/" + part)
-    with open(os.path.join(path + "__staging", part, "junk.parquet"), "w") as f:
-        f.write("uncommitted")
+    part = f"{BUCKET_COL}={_bucket_of(spark, tbl, 'k0')}"
+    crashed = os.path.join(path, part, "part-00000-crashed.c000.snappy.parquet")
+    _plant_parquet(crashed, id=["k0"], title=["torn"])
+    task_dir = os.path.join(path, "_temporary", "0", "task_crashed_m_000001", part)
+    os.makedirs(task_dir)
+    _plant_parquet(os.path.join(task_dir, "part-00001-crashed.c000.snappy.parquet"),
+                   id=["k0"], title=["torn"])
 
     state = {r.id: r.title for r in tbl.query().collect()}
-    assert len(state) == 32, "keys in the mid-swap bucket were lost"
+    assert len(state) == 32, "keys in the crashed commit's bucket were lost"
     assert state["k0"] == "v1"
-    assert not os.path.exists(path + "__old")
-    assert not os.path.exists(path + "__staging")
+
+    replay = _batch(spark, (100, "+U", "k0", "v2"))
+    for _ in range(2):  # the redelivery converges to the same state
+        tbl.apply_batch(replay)
+        state = {r.id: r.title for r in tbl.query().collect()}
+        assert len(state) == 32 and state["k0"] == "v2"
+        assert tbl.query().count() == 32  # no leftover row adopted beside k0
+    assert not os.path.exists(crashed)
+    assert not os.path.exists(os.path.join(path, "_temporary"))
 
 
 def test_full_rewrite_completed_swap_cleanup_drops_stale_copy(spark, tmp_path):
-    """The OTHER both-present case: a full rewrite's swap completed but
-    cleanup didn't. The kept-aside dir carries no partial-swap marker
-    and is entirely stale — recovery must NOT resurrect its buckets
-    (the new table may legitimately have dropped one)."""
+    """After a full rewrite the replaced files stay on disk for readers
+    that pinned the previous snapshot, but no new reader sees them —
+    the new table may legitimately have dropped a bucket — and the
+    next commit deletes them."""
     path = str(tmp_path / "serving")
     tbl = ServingTable(spark, path, key="id", num_buckets=4)
     tbl.apply_batch(_batch(spark, (1, "+I", "gone", "v1")))
-    b = _bucket_of(spark, tbl, "gone")
-    # overwrite to a state WITHOUT key "gone" (its bucket dir disappears)
+    part = f"{BUCKET_COL}={_bucket_of(spark, tbl, 'gone')}"
+    stale = [os.path.join(path, part, n) for n in tbl._latest()["files"][part]]
+    # overwrite to a state WITHOUT key "gone"
     tbl.overwrite(spark.createDataFrame([Row(id="kept", title="v1")]))
-    # simulate the stale pre-overwrite copy lingering as __old
-    os.makedirs(path + "__old/" + f"{BUCKET_COL}={b}")
-    with open(os.path.join(path + "__old", f"{BUCKET_COL}={b}", "stale.parquet"), "w") as f:
-        f.write("stale")
-    state = {r.id for r in tbl.query().collect()}
-    assert state == {"kept"}
-    assert not os.path.exists(os.path.join(path, f"{BUCKET_COL}={b}"))
-    assert not os.path.exists(path + "__old")
+    assert all(os.path.exists(p) for p in stale)  # retained for pinned readers
+    assert {r.id for r in tbl.query().collect()} == {"kept"}
+    assert tbl.lookup("gone").count() == 0
+
+    tbl.apply_batch(_batch(spark, (2, "+U", "kept", "v2")))
+    assert not any(os.path.exists(p) for p in stale)
+    assert {r.id: r.title for r in tbl.query().collect()} == {"kept": "v2"}
 
 
 def test_lookup_int_key_prunes_to_right_bucket(spark, tmp_path):
@@ -207,15 +235,20 @@ def test_commit_log_atomic_and_tmp_residue_ignored(spark, tmp_path):
 
 
 def test_stale_staging_is_discarded(spark, tmp_path):
+    """A crashed Spark write's ``_temporary`` task output is never
+    read, and never moved into the table by the next write's job
+    commit: the next commit discards it first."""
     path = str(tmp_path / "serving")
     tbl = ServingTable(spark, path, key="id")
     tbl.apply_batch(_batch(spark, (1, "+I", "a", "v1")))
-    os.makedirs(path + "__staging")
-    with open(os.path.join(path + "__staging", "junk.parquet"), "w") as f:
-        f.write("not committed")
+    task_dir = os.path.join(path, "_temporary", "0", "task_crashed_m_000000")
+    os.makedirs(task_dir)
+    _plant_parquet(os.path.join(task_dir, "part-00000-crashed.snappy.parquet"),
+                   id=["a", "z"], title=["torn", "torn"])
+    assert {r.id: r.title for r in tbl.query().collect()} == {"a": "v1"}
     tbl.apply_batch(_batch(spark, (2, "+U", "a", "v2")))
     assert {r.id: r.title for r in tbl.query().collect()} == {"a": "v2"}
-    assert not os.path.exists(path + "__staging")
+    assert not os.path.exists(os.path.join(path, "_temporary"))
 
 
 def test_bucketed_replay_idempotent(spark, tmp_path):
@@ -287,16 +320,8 @@ def test_compact_bucketed(spark, tmp_path):
     tbl.overwrite(wide)
     before = {r.id: r.title for r in tbl.query().collect()}
 
-    def files_per_bucket():
-        out = {}
-        for name in fs.list_names(spark, tbl.path):
-            if name.startswith(f"{BUCKET_COL}="):
-                out[name] = sum(
-                    1
-                    for f in fs.list_names(spark, f"{tbl.path}/{name}")
-                    if f.endswith(".parquet")
-                )
-        return out
+    def files_per_bucket():  # as the latest snapshot lists them
+        return {d: len(names) for d, names in tbl._latest()["files"].items()}
 
     assert any(n > 1 for n in files_per_bucket().values())
     compacted = tbl.compact(max_files_per_bucket=1)
@@ -311,12 +336,9 @@ def test_compact_unbucketed(spark, tmp_path):
     tbl = ServingTable(spark, str(tmp_path / "u"), key="id")
     tbl.apply_batch(_batch(spark, *[(i, "+I", f"k{i}", f"v{i}") for i in range(40)]))
     before = {r.id: r.title for r in tbl.query().collect()}
-    n_files = sum(1 for n in fs.list_names(spark, tbl.path) if n.endswith(".parquet"))
-    if n_files > 1:
+    if len(tbl._latest()["files"][""]) > 1:
         assert tbl.compact(max_files_per_bucket=1) == [0]
-    assert (
-        sum(1 for n in fs.list_names(spark, tbl.path) if n.endswith(".parquet")) == 1
-    )
+    assert len(tbl._latest()["files"][""]) == 1
     assert {r.id: r.title for r in tbl.query().collect()} == before
 
 
@@ -512,3 +534,234 @@ def test_auto_register_fields_off_rejects_unknown_columns(spark, tmp_path):
     loose.apply_batch(widened)
     rows = {r.id: r.asDict().get("extra") for r in loose.query().collect()}
     assert rows == {"a": None, "b": "nope"}
+
+
+def test_snapshot_commit_refuses_taken_number(spark, tmp_path):
+    """Snapshot N+1 is renamed into place only if absent: a commit that
+    lost the race to another writer raises and publishes nothing."""
+    import pytest
+
+    path = str(tmp_path / "race")
+    tbl = ServingTable(spark, path, key="id", num_buckets=2)
+    tbl.apply_batch(_batch(spark, (1, "+I", "a", "v1")))
+    snap = tbl._latest()
+    assert snap["id"] == 1 and snap["commit"]["kind"] == "batch"
+    with open(os.path.join(path, "_snapshots", "2.json"), "w") as f:
+        f.write(open(os.path.join(path, "_snapshots", "1.json")).read().replace('"id": 1', '"id": 2'))
+    with pytest.raises(IOError, match="snapshot 2 already exists"):
+        tbl._commit(snap, tbl.query(), [0, 1], "batch", 0)
+    assert tbl._latest()["id"] == 2
+
+
+def test_reads_never_write(spark, tmp_path, monkeypatch):
+    """read / exists / query / lookup / commits — and the actions on
+    what they return — make no mutating filesystem call."""
+    tbl = ServingTable(spark, str(tmp_path / "ro"), key="id", num_buckets=4)
+    tbl.apply_batch(_batch(spark, *[(i, "+I", f"k{i}", "v1") for i in range(16)]))
+    writes = []
+    for name in ("delete", "rename", "_rename_or_raise", "mkdirs", "write_text", "write_text_atomic"):
+        orig = getattr(fs, name)
+        monkeypatch.setattr(
+            fs, name, lambda *a, _n=name, _o=orig, **k: writes.append(_n) or _o(*a, **k)
+        )
+    reader = ServingTable(spark, tbl.path, key="id", num_buckets=4)
+    assert reader.exists()
+    assert reader.read().count() == 16
+    assert reader.query().count() == 16
+    assert [r.title for r in reader.lookup("k3").collect()] == ["v1"]
+    assert len(reader.commits()) == 1
+    assert ServingTable(spark, str(tmp_path / "absent"), key="id").read() is None
+    assert writes == []
+
+
+def test_read_launches_no_job_before_action(spark, tmp_path):
+    """A read names its snapshot's files, so building the DataFrame
+    lists nothing in a Spark job — even past Spark's default 32-path
+    parallel-listing threshold."""
+    tbl = ServingTable(spark, str(tmp_path / "nj"), key="id", num_buckets=8)
+    wide = spark.createDataFrame(
+        [Row(id=f"k{i}", title="v") for i in range(400)]
+    ).repartition(8)
+    tbl.overwrite(wide)
+    assert sum(len(v) for v in tbl._latest()["files"].values()) > 32
+    sc = spark.sparkContext
+    sc.setJobGroup("read-no-job", "read-no-job")
+    try:
+        df = tbl.read()
+        assert sc.statusTracker().getJobIdsForGroup("read-no-job") == []
+        assert df.count() == 400
+        assert sc.statusTracker().getJobIdsForGroup("read-no-job") != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_read_reuses_frame_until_next_commit(spark, tmp_path):
+    """Reads of an unchanged snapshot share one frame; after a commit
+    the next read is a new frame over the new snapshot, and the old
+    frame still reads the snapshot it pinned."""
+    tbl = ServingTable(spark, str(tmp_path / "fr"), key="id", num_buckets=4)
+    tbl.apply_batch(_batch(spark, (1, "+I", "a", "v1")))
+    first = tbl.read()
+    assert tbl.read() is first
+    tbl.apply_batch(_batch(spark, (2, "+U", "a", "v2"), (3, "+I", "b", "v1")))
+    second = tbl.read()
+    assert second is not first
+    assert sorted((r.id, r.title) for r in second.collect()) == [("a", "v2"), ("b", "v1")]
+    assert [(r.id, r.title) for r in first.collect()] == [("a", "v1")]
+
+
+def test_concurrent_reader_sees_every_commit(spark, tmp_path):
+    """A reader thread keeps looking up keys no batch touches and
+    counting the table while the main thread applies bucketed batches:
+    no lookup misses, no reader raises, and the final state equals a
+    plain last-wins over the same changelog."""
+    path = str(tmp_path / "live")
+    tbl = ServingTable(spark, path, key="id", num_buckets=4)
+    static = {f"s{i}": "static" for i in range(16)}
+    tbl.apply_batch(_batch(spark, *[(i, "+I", k, v) for i, (k, v) in enumerate(static.items())]))
+
+    rng = random.Random(7)
+    seq = 100
+    batches, changelog = [], []
+    for b in range(12):
+        ops = []
+        for _ in range(12):
+            seq += 1
+            ops.append((seq, rng.choice(["+I", "+U", "+U", "-D"]), f"d{rng.randrange(24)}", f"v{b}"))
+        batches.append(ops)
+        changelog += ops
+
+    done = threading.Event()
+    misses, errors, ops_done = [], [], [0]
+
+    def read_loop():
+        reader = ServingTable(spark, path, key="id", num_buckets=4)
+        i = 0
+        while not done.is_set():
+            key = f"s{i % len(static)}"
+            try:
+                got = [(r.id, r.title) for r in reader.lookup(key).collect()]
+                if got != [(key, "static")]:
+                    misses.append((key, got))
+                if i % 4 == 0 and reader.query().count() < len(static):
+                    misses.append(("count", i))
+            except Exception as exc:  # noqa: BLE001 - every failure counts
+                errors.append(repr(exc))
+            ops_done[0] += 1
+            i += 1
+
+    t = threading.Thread(target=read_loop, daemon=True)
+    t.start()
+    try:
+        for ops in batches:
+            tbl.apply_batch(_batch(spark, *ops))
+    finally:
+        done.set()
+        t.join(timeout=120)
+    assert not t.is_alive()
+    assert errors == []
+    assert misses == []
+    assert ops_done[0] >= 5
+
+    expected = dict(static)
+    for _seq, kind, key, title in sorted(changelog):
+        if kind == "-D":
+            expected.pop(key, None)
+        else:
+            expected[key] = title
+    assert {r.id: r.title for r in tbl.query().collect()} == expected
+
+
+def test_read_text_rereads_destination_when_tmp_vanishes(spark, tmp_path, monkeypatch):
+    """The destination is missing and the ``.tmp`` fallback exists —
+    then a writer renames the ``.tmp`` into place before it is opened.
+    read_text returns the renamed content instead of raising."""
+    p = str(tmp_path / "r.json")
+    with open(p + ".tmp", "w") as f:
+        f.write('["staged"]')
+    real_read = fs._read_if_present
+    opened = []
+
+    def racing_read(spark_, path):
+        opened.append(path)
+        if path == p + ".tmp":
+            os.rename(p + ".tmp", p)  # the writer wins the race
+        return real_read(spark_, path)
+
+    monkeypatch.setattr(fs, "_read_if_present", racing_read)
+    assert fs.read_text(spark, p) == '["staged"]'
+    assert opened == [p, p + ".tmp", p]
+    assert not os.path.exists(p + ".tmp")
+
+
+def test_first_commit_refuses_unsnapshotted_data(spark, tmp_path):
+    """A directory holding data but no ``_snapshots/`` — a table written
+    before snapshot commits — is refused by the first commit, and its
+    files stay. A crashed first commit's leftovers (``_snapshots/`` made,
+    no snapshot yet) are the table's own and are cleaned instead."""
+    import pytest
+
+    old = tmp_path / "old"
+    (old / f"{BUCKET_COL}=0").mkdir(parents=True)
+    data = old / f"{BUCKET_COL}=0" / "part-00000-old.c000.snappy.parquet"
+    _plant_parquet(str(data), id=["a"], title=["kept"])
+    (old / "_schema.json").write_text("{}")
+    tbl = ServingTable(spark, str(old), key="id", num_buckets=2)
+    assert not tbl.exists()
+    with pytest.raises(IOError, match="no snapshot"):
+        tbl.apply_batch(_batch(spark, (1, "+I", "b", "v1")))
+    assert data.exists() and (old / "_schema.json").exists()
+    assert not (old / "_snapshots").exists()
+
+    crashed = tmp_path / "crashed"
+    (crashed / "_snapshots").mkdir(parents=True)
+    (crashed / f"{BUCKET_COL}=0").mkdir()
+    leftover = crashed / f"{BUCKET_COL}=0" / "part-00000-crashed.c000.snappy.parquet"
+    _plant_parquet(str(leftover), id=["a"], title=["torn"])
+    tbl = ServingTable(spark, str(crashed), key="id", num_buckets=2)
+    tbl.apply_batch(_batch(spark, (1, "+I", "b", "v1")))
+    assert {r.id: r.title for r in tbl.query().collect()} == {"b": "v1"}
+    assert not leftover.exists()
+
+
+def test_missing_hinted_snapshot_raises(spark, tmp_path):
+    """A LATEST hint naming a snapshot that is gone, with no newer one,
+    raises naming the table rather than retrying forever."""
+    import pytest
+
+    path = str(tmp_path / "pruned")
+    tbl = ServingTable(spark, path, key="id")
+    tbl.apply_batch(_batch(spark, (1, "+I", "a", "v1")))
+    os.remove(os.path.join(path, "_snapshots", "1.json"))
+    with pytest.raises(FileNotFoundError, match="snapshot 1 is missing"):
+        tbl.exists()
+
+
+def test_partial_commit_lists_only_touched_buckets(spark, tmp_path, monkeypatch):
+    """A bucketed commit lists only the buckets it rewrites and those the
+    previous commit replaced. A leftover in any other bucket is never
+    read, and goes when its bucket is next rewritten."""
+    path = str(tmp_path / "scoped")
+    tbl = ServingTable(spark, path, key="id", num_buckets=8)
+    keys = {}
+    for i in range(64):
+        keys.setdefault(_bucket_of(spark, tbl, f"k{i}"), f"k{i}")
+    b1, b2, b3 = sorted(keys)[:3]
+    tbl.apply_batch(_batch(spark, *[(i, "+I", k, "v1") for i, k in enumerate(keys.values())]))
+    tbl.apply_batch(_batch(spark, (100, "+U", keys[b1], "v2")))
+    leftover = os.path.join(path, f"{BUCKET_COL}={b3}", "part-00000-crashed.c000.snappy.parquet")
+    _plant_parquet(leftover, id=[keys[b3]], title=["torn"])
+
+    listed = []
+    real = fs.list_names
+    monkeypatch.setattr(fs, "list_names", lambda s, p: listed.append(p) or real(s, p))
+    tbl.apply_batch(_batch(spark, (101, "+U", keys[b2], "v2")))
+    assert sorted(listed) == sorted(
+        f"{path}/{BUCKET_COL}={b}" for b in (b1, b2, b2)  # b2 again after the write
+    )
+    assert os.path.exists(leftover)
+    assert tbl.lookup(keys[b3]).collect()[0].title == "v1"
+
+    tbl.apply_batch(_batch(spark, (102, "+U", keys[b3], "v2")))
+    assert not os.path.exists(leftover)
+    assert tbl.query().count() == len(keys)

@@ -64,3 +64,18 @@ def test_apply_s3a_to_live_session(spark):
     hconf = spark._jsc.hadoopConfiguration()
     assert hconf.get("fs.s3a.endpoint") == "http://e:1"
     assert hconf.get("fs.s3a.connection.maximum") == "256"
+
+
+def test_driver_memory_default_follows_host(tmp_path, monkeypatch):
+    from platypus_ingestion_plugins_spark.session import _driver_memory
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    small = tmp_path / "small"
+    small.write_text("MemTotal:       15728640 kB\nMemFree:  1 kB\n")  # 15 GiB host
+    assert _driver_memory(str(small)) == "7680m"
+    big = tmp_path / "big"
+    big.write_text("MemTotal:       131072000 kB\n")
+    assert _driver_memory(str(big)) == "16384m"  # capped at 16g
+    assert _driver_memory(str(tmp_path / "missing")) == "16g"
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert _driver_memory(str(small)) == "3g"
