@@ -15,9 +15,16 @@ number is absent. ``rename`` onto an existing file fails on HDFS
 (atomically) and on the local filesystem; on S3A rename is a
 server-side copy and the if-absent check is not atomic, so one writer
 per table is assumed there.
+
+The band-key, IVF, term-index and CDC compactors rename nothing: they
+write new files beside the old ones and then delete the old ones
+(``rewrite_dirs``), as Paimon drops replaced data files after a commit
+(PaimonIngestor.java:269-276).
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
@@ -122,22 +129,48 @@ def _rename_or_raise(spark: SparkSession, src: str, dst: str) -> None:
         raise IOError(f"rename failed: {src} -> {dst}")
 
 
-def rename_numbered(
-    spark: SparkSession, src: str, dst_dir: str, name: str
-) -> str:
-    """Move ``src`` into ``dst_dir`` as ``name``, falling back to
-    ``healed-N-<name>`` for the first free N when the destination is
-    taken — the idempotent-under-repeated-crashes heal rename shared
-    by the band-key and IVF compactors (a crash mid-heal leaves both
-    <name> and healed-1-<name>; the re-run must find a free slot, not
-    fail every subsequent compaction). Returns the destination used."""
-    dst = f"{dst_dir}/{name}"
-    n_try = 0
-    while exists(spark, dst):
-        n_try += 1
-        dst = f"{dst_dir}/healed-{n_try}-{name}"
-    _rename_or_raise(spark, src, dst)
-    return dst
+def rewrite_dirs(
+    spark: SparkSession,
+    dirs: list[str],
+    write: Callable[[], None],
+    outputs: list[str],
+) -> None:
+    """Rename-free compaction: replace the files in ``dirs`` with the
+    ones ``write`` appends.
+
+    1. List the files in ``dirs``; delete a crashed Spark write's
+       ``_temporary`` under each path in ``outputs`` (the next job
+       commit would otherwise move its task output in).
+    2. ``write()`` appends the compacted rows into the same
+       directories as new, uniquely named part files.
+    3. Delete the files listed in step 1, in ``dirs`` order. A
+       directory the write added nothing to is deleted whole.
+
+    A crash between steps 2 and 3 leaves old and new files side by
+    side, so this serves only tables that read the same either way (a
+    set read distinct, a last-wins log whose copies tie on seq). A
+    re-run compacts both into one."""
+    old = [(d, set(list_names(spark, d))) for d in dirs]
+    for out in outputs:
+        delete(spark, f"{out}/_temporary")
+    write()
+    for d, names in old:
+        if set(list_names(spark, d)) <= names:
+            delete(spark, d)
+        else:
+            for name in sorted(names):
+                delete(spark, f"{d}/{name}")
+
+
+def leftover_error(path: str) -> IOError:
+    """The error for a directory an older, rename-based compaction left
+    behind (a parked original or a staged copy). It may hold the only
+    copy of some rows, so it is never dropped silently."""
+    return IOError(
+        f"{path} is left over from an interrupted rename-based compaction "
+        "and may hold the only copy of some rows; move its files back "
+        "into the index by hand, then delete it"
+    )
 
 
 def read_text(spark: SparkSession, path: str) -> str | None:

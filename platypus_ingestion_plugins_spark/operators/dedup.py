@@ -403,14 +403,14 @@ def compact_line_count_index(
 ) -> bool:
     """Re-aggregate a fragmented line-count index (every append adds
     one file per touched kb= directory) down to one summed file per
-    bucket. Counts are NOT idempotent — re-merging a parked file, the
-    band-key compactor's heal, would double-count and over-suppress —
-    so the rewrite is a WHOLE-INDEX staged swap with the serving
-    table's two-rename discipline: build ``<path>__staging``, rename
-    the live index aside to ``<path>__old``, rename staging in, delete
-    the old copy. A crash between the renames leaves the aside copy as
-    the only index; the next compact or pruned read heals by restoring
-    it (``_heal_line_count_index``). Returns True when a rewrite
+    bucket. Counts are NOT idempotent — old and new files side by
+    side, which the band-key compactor tolerates after a crash, would
+    double-count and over-suppress — so the rewrite is a WHOLE-INDEX
+    staged swap: build ``<path>__staging``, rename the live index
+    aside to ``<path>__old``, rename staging in, delete the old copy.
+    A crash between the renames leaves the aside copy as the only
+    index; the next compact or pruned read heals by restoring it
+    (``_heal_line_count_index``). Returns True when a rewrite
     happened.
 
     ``exclude_batch_id``: rows tagged with that epoch pass through the
@@ -1111,23 +1111,9 @@ def lsh_candidate_pairs(
     sig: DataFrame,
     id_col: str,
     bands: int = 4,
-    max_band_bucket: int | None = None,
 ) -> DataFrame:
     """Band the signature and bucket-join: docs sharing any band bucket
-    are candidates. bands must divide the signature length.
-
-    ``max_band_bucket`` is the HOT-BAND cap (VERDICT r14 task #6): a
-    band bucket with m members contributes m(m-1)/2 candidate pairs,
-    so one boilerplate signature shared by 10^5 docs is 5x10^9 pairs
-    from a single bucket — the quadratic blowup band-blocking exists
-    to avoid, reintroduced through the back door. With the cap set,
-    buckets larger than ``max_band_bucket`` are DROPPED before the
-    self-join (one partial-aggregatable count per (band, bucket)).
-    Recall trade, same shape as ``cap_shingle_df``: docs in a dropped
-    bucket can still pair through their other bands — with b bands a
-    true near-dup pair is lost only if EVERY band that matches it is
-    hot. Default None (exact candidates — the oracle-replayed
-    semantics); set it on corpora with boilerplate-heavy signatures."""
+    are candidates. bands must divide the signature length."""
     banded = sig.select(
         id_col,
         F.posexplode(
@@ -1146,25 +1132,6 @@ def lsh_candidate_pairs(
             )
         ).alias("pos", "bb"),
     ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    if max_band_bucket is not None:
-        if max_band_bucket < 2:
-            raise ValueError(
-                f"max_band_bucket must be >= 2, got {max_band_bucket}"
-            )
-        # the cap_shingle_df shape (one hot-key guard, one plan): a
-        # partial-aggregatable count per (band, bucket) reduced to the
-        # hot set — tiny by construction, every member breeds > cap²/2
-        # pairs — then a broadcast anti-join; cheaper than a window
-        # count materialized on every banded row
-        hot = (
-            banded.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("__bc"))
-            .filter(F.col("__bc") > max_band_bucket)
-            .select("band", "bucket")
-        )
-        banded = banded.join(
-            F.broadcast(hot), ["band", "bucket"], "left_anti"
-        )
     a = banded.withColumnRenamed(id_col, "id_a")
     b = banded.withColumnRenamed(id_col, "id_b")
     return (
@@ -1185,13 +1152,9 @@ def minhash_lsh_dedup_pairs(
     threshold: float = 0.5,
     max_shingle_df: int | None = None,
     single_eval: bool = True,
-    max_band_bucket: int | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: signatures -> band buckets ->
     candidate pairs -> verify with true Jaccard >= threshold.
-    ``max_band_bucket`` caps hot band buckets (see
-    ``lsh_candidate_pairs`` — the quadratic-bucket guard for
-    boilerplate-heavy corpora; default None keeps exact candidates).
 
     The verification join is candidate-DRIVEN: the candidate pair set
     (bounded by the LSH blocking, tiny next to the corpus) is joined to
@@ -1245,7 +1208,7 @@ def minhash_lsh_dedup_pairs(
     sig = minhash_from_shingles(sh, id_col, num_hashes)
     if big:
         sig = sig.localCheckpoint(eager=True)
-    cands = lsh_candidate_pairs(sig, id_col, bands, max_band_bucket)
+    cands = lsh_candidate_pairs(sig, id_col, bands)
     if big:
         cands = cands.localCheckpoint(eager=True)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
@@ -1836,10 +1799,11 @@ def append_band_key_index(
     file per batch. The check is a directory listing bounded by
     bands x val_buckets (fixed layout, not corpus size); the rewrite
     only runs when fragmented. Safe mid-stream: band keys are
-    set-semantics idempotent, and a crash mid-swap heals on the next
-    append/compact. Callers that own a wider maintenance window (e.g.
-    between drains) can keep this off and call the compactor
-    directly."""
+    set-semantics idempotent, so the old and new files a crashed
+    compaction leaves side by side read the same, and the next
+    compaction folds them. Callers that own a wider maintenance
+    window (e.g. between drains) can keep this off and call the
+    compactor directly."""
     from .. import fs as _fs
 
     spark = keys.sparkSession
@@ -1873,116 +1837,84 @@ def compact_band_key_index(
     touched directory, so after B micro-batches a hot directory holds
     up to B files and the pruned read's cost drifts from data size to
     file count — the same small-file pathology ``ServingTable.compact``
-    handles for serving buckets.
+    handles for serving buckets. Run between drains: no appender may
+    write the index meanwhile. See ``compact_partition_dirs`` for the
+    protocol. Returns the directories rewritten."""
+    return compact_partition_dirs(spark, path, ("band", "vb"), max_files_per_dir)
 
-    Run between drains: the swap assumes no concurrent appender or
-    reader on the directories it rewrites (the streaming loop owns the
-    index, so scheduling compaction between ``availableNow`` runs is
-    the natural slot). All oversized directories are rewritten in ONE
-    Spark job (partition-pruned read of just those dirs, one shuffle
-    task per dir — the same single-pass shape as
-    ``ServingTable.compact``), staged under a dot-prefixed dir, then
-    swapped per-directory: park the original at a dot-prefixed
-    sibling, rename the staged copy in, drop the park. Renames are
-    checked (``fs._rename_or_raise`` — Hadoop rename reports failure
-    by returning false; proceeding would destroy the parked original),
-    and the next call heals any interrupted state before compacting
-    further: a parked original whose vb= dir is missing is restored by
-    rename; one whose vb= dir EXISTS is merged file-by-file into it
-    (never deleted outright — the live dir may be a post-crash append
-    recreation holding only new rows, so dropping the park would lose
-    every pre-crash key); stale staging is discarded. The merge can
-    re-add rows a completed swap already compacted — duplicate keys
-    are semantically idempotent here and the next compaction's
-    dropDuplicates absorbs them.
-    Dot-prefixed names keep every intermediate state invisible to
-    Spark's partition discovery, so a crash never breaks readers of
-    the rest of the index. Returns the directories rewritten."""
+
+def compact_partition_dirs(
+    spark, path: str, part_cols: tuple[str, ...], max_files_per_dir: int
+) -> list[str]:
+    """Rewrite each leaf partition directory of a set-valued index (the
+    band-key index, the IVF lists) that holds more than
+    ``max_files_per_dir`` parquet files to one file, without a rename
+    (``fs.rewrite_dirs``): the rows of every oversized directory are
+    read in ONE partition-pruned job, deduplicated, and appended back
+    as one new file per directory (one shuffle task per directory);
+    then the old files are deleted.
+
+    A crash before the deletes finish leaves old and new files side
+    by side. Both hold the same keys, and the index is a set: readers
+    see the same answer, and the next compaction's ``dropDuplicates``
+    (which also absorbs replayed appends) folds them into one file. A
+    dot-prefixed ``.precompact-*`` park or ``.compact_staging`` dir left
+    by the older rename-based compactor raises ``IOError`` with every
+    file kept. Returns the directories rewritten, in listing order."""
     from .. import fs as _fs
 
-    staging = f"{path}/.compact_staging"
-    oversized: list[tuple[int, int]] = []
-    for band_name in sorted(_fs.list_names(spark, path)):
-        if not band_name.startswith("band="):
-            continue
-        band_dir = f"{path}/{band_name}"
-        # heal pass FIRST: a parked original whose vb= dir is missing
-        # would never be visited by the vb= scan below
-        for name in sorted(_fs.list_names(spark, band_dir)):
-            if name.startswith(".precompact-"):
-                parked_dir = f"{band_dir}/{name}"
-                orig = f"{band_dir}/{name[len('.precompact-'):]}"
-                if not _fs.exists(spark, orig):
-                    _fs._rename_or_raise(spark, parked_dir, orig)
-                else:
-                    # A live vb= dir beside a park does NOT prove the
-                    # swap finished: a crash between park and
-                    # swap-in, followed by a streaming append, would
-                    # RECREATE the vb= dir holding only post-crash
-                    # rows — deleting the park then would silently
-                    # drop every pre-crash key and re-admit their
-                    # near-duplicates. The index tolerates duplicate
-                    # keys (appends are replay-idempotent), so the
-                    # always-safe heal is to MERGE: move the park's
-                    # parquet files into the live dir and delete the
-                    # park only once it holds no data. If the swap
-                    # did finish, the staged dir was already deleted
-                    # and the park holds the only copy of its rows —
-                    # merging re-adds rows the compacted file already
-                    # has, which dedup semantics absorb.
-                    for f_name in sorted(_fs.list_names(spark, parked_dir)):
-                        if not f_name.endswith(".parquet"):
-                            continue  # checksum sidecars die with the park
-                        _fs.rename_numbered(
-                            spark, f"{parked_dir}/{f_name}", orig, f_name
-                        )
-                    _fs.delete(spark, parked_dir)
-            elif name.startswith(".compacting-"):
-                # stale per-dir staged copy from the pre-single-job
-                # algorithm's crashes — never referenced again
-                _fs.delete(spark, f"{band_dir}/{name}")
-        for vb_name in sorted(_fs.list_names(spark, band_dir)):
-            if not vb_name.startswith("vb="):
-                continue
-            files = [
-                n
-                for n in _fs.list_names(spark, f"{band_dir}/{vb_name}")
-                if n.endswith(".parquet")
-            ]
-            if len(files) > max_files_per_dir:
-                oversized.append(
-                    (int(band_name.split("=", 1)[1]), int(vb_name.split("=", 1)[1]))
-                )
-    _fs.delete(spark, staging)  # stale staging from a crash
+    leaves: list[tuple[tuple[str, ...], str]] = [((), path)]
+    for col in part_cols:
+        found = []
+        for vals, d in leaves:
+            for name in sorted(_fs.list_names(spark, d)):
+                if name.startswith((".precompact-", ".compact_staging")):
+                    raise _fs.leftover_error(f"{d}/{name}")
+                if name.startswith(f"{col}="):
+                    found.append((vals + (name.split("=", 1)[1],), f"{d}/{name}"))
+        leaves = found
+    oversized = [
+        (vals, d)
+        for vals, d in leaves
+        if sum(n.endswith(".parquet") for n in _fs.list_names(spark, d))
+        > max_files_per_dir
+    ]
     if not oversized:
         return []
-    pred = None
-    for band, vb in oversized:
-        c = (F.col("band") == band) & (F.col("vb") == vb)
-        pred = c if pred is None else pred | c
-    (
-        spark.read.parquet(path)
-        .filter(pred)  # partition-pruned: only the oversized dirs
-        # the index is a SET (appends are replay-idempotent, the
-        # crash-heal merges parked files back in): compaction is the
-        # place duplicate keys from replays/heals get absorbed, and
-        # the distinct rides the same shuffle the rewrite needs anyway
-        .dropDuplicates()
-        .repartition(len(oversized), "band", "vb")
-        .write.partitionBy("band", "vb")
-        .parquet(staging)
-    )
-    compacted: list[str] = []
-    for band, vb in oversized:
-        d = f"{path}/band={band}/vb={vb}"
-        staged = f"{staging}/band={band}/vb={vb}"
-        parked = f"{path}/band={band}/.precompact-vb={vb}"
-        _fs._rename_or_raise(spark, d, parked)
-        _fs._rename_or_raise(spark, staged, d)
-        _fs.delete(spark, parked)
-        compacted.append(d)
-    _fs.delete(spark, staging)
-    return compacted
+
+    def _typed(s: str):
+        try:
+            return int(s)
+        except ValueError:
+            return s
+
+    # one literal IN per prefix (per band for the band-key index):
+    # values in the partition column's own type, because a cast on the
+    # column side would defeat PruneFileSourcePartitions
+    by_prefix: dict[tuple[str, ...], list] = {}
+    for vals, _ in oversized:
+        by_prefix.setdefault(vals[:-1], []).append(_typed(vals[-1]))
+    pred = F.lit(False)
+    for prefix, last in by_prefix.items():
+        c = F.col(part_cols[-1]).isin(last)
+        for col, v in zip(part_cols, prefix):
+            c = c & (F.col(col) == _typed(v))
+        pred = pred | c
+
+    def write():
+        (
+            spark.read.parquet(path)
+            .filter(pred)  # partition-pruned: only the oversized dirs
+            .dropDuplicates()
+            .repartition(len(oversized), *part_cols)
+            .write.mode("append")
+            .partitionBy(*part_cols)
+            .parquet(path)
+        )
+
+    dirs = [d for _, d in oversized]
+    _fs.rewrite_dirs(spark, dirs, write, [path])
+    return dirs
 
 
 def read_band_keys_pruned(

@@ -707,8 +707,9 @@ def append_ivf_partitioned(
     count per list plateaus at threshold+1 across unbounded ingest
     batches. Listing cost is bounded by centroid count (fixed layout);
     vectors are append-idempotent under the compactor's
-    ``dropDuplicates``, so mid-stream compaction is safe and a crashed
-    swap heals on the next append."""
+    ``dropDuplicates``, so mid-stream compaction is safe: the old and
+    new files a crashed compaction leaves side by side read the same,
+    and the next compaction folds them."""
     from .. import fs as _fs
 
     spark = emb.sparkSession
@@ -739,73 +740,14 @@ def compact_ivf_partitioned(
     spark, path: str, max_files_per_dir: int = 4
 ) -> list[str]:
     """Rewrite fragmented ``cent_id=`` list directories to one file
-    each — the same single-job copy-park-swap crash discipline as
-    ``compact_band_key_index`` (dedup.py), one level deep: heal any
-    interrupted prior run first (a parked original whose live dir is
-    missing is restored by rename; one whose live dir EXISTS — a
-    post-crash append recreation — is MERGED file-by-file, never
-    deleted), rewrite all oversized lists in ONE partition-pruned job
-    with ``dropDuplicates`` (replay/heal idempotence), then swap each
-    directory via dot-prefixed park. Run between ingest batches; the
-    swap assumes no concurrent appender/reader on the rewritten
-    lists. Returns the directories rewritten."""
-    from .. import fs as _fs
+    each — ``compact_band_key_index``'s protocol one level deep
+    (``dedup.compact_partition_dirs``: one partition-pruned job with
+    ``dropDuplicates`` appends the new files, then the old ones are
+    deleted; no rename). Run between ingest batches: no appender may
+    write the lists meanwhile. Returns the directories rewritten."""
+    from .dedup import compact_partition_dirs
 
-    staging = f"{path}/.compact_staging"
-    for name in sorted(_fs.list_names(spark, path)):
-        if name.startswith(".precompact-"):
-            parked = f"{path}/{name}"
-            orig = f"{path}/{name[len('.precompact-'):]}"
-            if not _fs.exists(spark, orig):
-                _fs._rename_or_raise(spark, parked, orig)
-            else:
-                for f_name in sorted(_fs.list_names(spark, parked)):
-                    if not f_name.endswith(".parquet"):
-                        continue
-                    _fs.rename_numbered(spark, f"{parked}/{f_name}", orig, f_name)
-                _fs.delete(spark, parked)
-    oversized = []
-    for name in sorted(_fs.list_names(spark, path)):
-        if not name.startswith("cent_id="):
-            continue
-        files = [
-            n
-            for n in _fs.list_names(spark, f"{path}/{name}")
-            if n.endswith(".parquet")
-        ]
-        if len(files) > max_files_per_dir:
-            oversized.append(name.split("=", 1)[1])
-    _fs.delete(spark, staging)
-    if not oversized:
-        return []
-
-    def _typed(s: str):
-        try:
-            return int(s)
-        except ValueError:
-            return s
-
-    (
-        spark.read.parquet(path)
-        # literal values in the partition column's own type: a cast on
-        # the column side would defeat PruneFileSourcePartitions
-        .filter(F.col("cent_id").isin([_typed(s) for s in oversized]))
-        .dropDuplicates()
-        .repartition(len(oversized), "cent_id")
-        .write.partitionBy("cent_id")
-        .parquet(staging)
-    )
-    compacted: list[str] = []
-    for cid in oversized:
-        d = f"{path}/cent_id={cid}"
-        staged = f"{staging}/cent_id={cid}"
-        parked = f"{path}/.precompact-cent_id={cid}"
-        _fs._rename_or_raise(spark, d, parked)
-        _fs._rename_or_raise(spark, staged, d)
-        _fs.delete(spark, parked)
-        compacted.append(d)
-    _fs.delete(spark, staging)
-    return compacted
+    return compact_partition_dirs(spark, path, ("cent_id",), max_files_per_dir)
 
 
 def ivf_probe_scan(

@@ -40,7 +40,6 @@ def clean_corpus(
     decontam_n: int = 13,
     max_shingle_df: int | None = None,
     single_eval: bool = True,
-    max_band_bucket: int | None = None,
 ) -> DataFrame:
     """The hygiene chain: returns the cleaned corpus (original columns,
     ``text_col`` NFC-normalized) plus a ``kept_reason``-free contract —
@@ -117,15 +116,13 @@ def clean_corpus(
     deduped = _stage(normed.join(survivors, id_col, "left_semi"))
 
     # near-dup: LSH pairs -> components -> keep group minimum
-    # at corpus scale SET max_shingle_df AND max_band_bucket: one
-    # boilerplate phrase shared by 10^6 docs is 10^12 candidate pairs
-    # without the hot-key caps (shingle-df bounds the gram fan-out,
-    # band-bucket bounds the signature-collision fan-out — a pair is
-    # lost only if EVERY band matching it is hot)
+    # at corpus scale SET max_shingle_df: one boilerplate phrase shared
+    # by 10^6 docs is 10^12 candidate pairs without the hot-key cap,
+    # which bounds the gram fan-out
     pairs = dedup.minhash_lsh_dedup_pairs(
         deduped, text_col, id_col, n=shingle_n,
         threshold=near_dup_threshold, max_shingle_df=max_shingle_df,
-        single_eval=single_eval, max_band_bucket=max_band_bucket,
+        single_eval=single_eval,
     )
     groups = dedup.connected_components_star(
         pairs, nodes=deduped.select(id_col), id_col=id_col

@@ -226,65 +226,61 @@ def _apply_deletes(spark: SparkSession, path: str, postings: DataFrame) -> DataF
 def compact_term_index(spark: SparkSession, path: str) -> None:
     """Physical compaction: fold the accumulated per-batch posting
     files into one distinct posting set per bucket, applying the
-    tombstones for real, then drop the delete side table. The rewrite
-    goes through a dot-staging dir and a rename swap (the serving-
-    table crash discipline): a crash leaves either the original
-    layout (with tombstones still active — readers stay correct) or
-    the compacted one; re-running heals. Steady-state append+compact
-    keeps files-per-bucket plateaued, the band-key-index policy."""
-    # Heal a crashed prior compaction FIRST (the cdc compact_snapshots
-    # discipline): a crash between "path staged out" and "staging
-    # renamed in" leaves no live index — the .old park dir is the
-    # marker, and the ORIGINAL (tombstones still active, readers
-    # correct) is what gets restored; the staging dir's completeness
-    # is unknowable, so it is discarded, never promoted.
+    tombstones for real, then drop the delete side table.
+    Steady-state append+compact keeps files-per-bucket plateaued, the
+    band-key-index policy.
+
+    No rename (``fs.rewrite_dirs``): the compacted postings and
+    ``_doclens`` are appended beside the old files, the term
+    dictionary is rewritten, then the old files are deleted,
+    ``_deletes`` last. A crash before the deletes finish leaves old
+    and new files side by side, which read the same: postings and
+    ``_doclens`` are read distinct, and the tombstones stay active
+    until every old file is gone. A re-run compacts both. A
+    ``{path}.old`` left by the older rename-based compactor raises
+    ``IOError`` with every file kept."""
     old = f"{path}.old"
+    if _fs.exists(spark, old):
+        raise _fs.leftover_error(old)
     if not _fs.exists(spark, path):
-        if _fs.exists(spark, old):
-            if not _fs.rename(spark, old, path):
-                raise IOError(f"could not restore {old} to {path}")
-        else:
-            raise ValueError(f"no term index at {path}")
-    marker = f"{path}/{_SIDECAR}"
-    pinned = _fs.read_text(spark, marker)
-    if pinned is None:
+        raise ValueError(f"no term index at {path}")
+    if _fs.read_text(spark, f"{path}/{_SIDECAR}") is None:
         raise ValueError(f"no {_SIDECAR} sidecar at {path}; not a term index")
-    idx = spark.read.parquet(path)
-    compacted = _apply_deletes(spark, path, idx).distinct()
-    staging = f"{path}.compacting"
-    _fs.delete(spark, staging)
-    compacted.write.mode("overwrite").partitionBy("tb").parquet(staging)
+    compacted = _apply_deletes(spark, path, spark.read.parquet(path)).distinct()
     dl_path = f"{path}/_doclens"
+    dirs = [
+        f"{path}/{n}" for n in sorted(_fs.list_names(spark, path)) if n.startswith("tb=")
+    ]
+    # fold the norms table the same way: tombstones applied,
+    # replayed-append duplicates collapsed
+    doclens = None
     if _fs.exists(spark, dl_path):
-        # fold the norms table the same way: tombstones applied,
-        # replayed-append duplicates collapsed
-        _apply_deletes(
-            spark, path, spark.read.parquet(dl_path).distinct()
-        ).write.mode("overwrite").parquet(f"{staging}/_doclens")
-    # persist the term dictionary (Lucene keeps one for the same
-    # reason): (term, doc_freq) folded from the compacted postings, so
-    # suggest_terms reads dictionary-sized data instead of re-deriving
-    # from all postings. Valid only while no NEW tombstones arrive —
-    # readers check for _deletes and fall back to derivation.
-    doc_col = [c for c in compacted.columns if c not in ("term", "tb", "pos")][0]
-    (
-        compacted.select(doc_col, "term")
-        .distinct()
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).cast("long").alias("doc_freq"))
-        .write.mode("overwrite")
-        .parquet(f"{staging}/_termdict")
-    )
-    _fs.write_text(spark, f"{staging}/{_SIDECAR}", pinned)
-    old = f"{path}.old"
-    _fs.delete(spark, old)
-    if not _fs.rename(spark, path, old):
-        raise IOError(f"could not stage out {path}")
-    if not _fs.rename(spark, staging, path):
-        # restore the original so the index stays readable
-        _fs.rename(spark, old, path)
-        raise IOError(f"could not swap compacted index into {path}")
-    _fs.delete(spark, old)
+        doclens = _apply_deletes(spark, path, spark.read.parquet(dl_path).distinct())
+        dirs.append(dl_path)
+    dirs.append(f"{path}/_deletes")  # last: tombstones outlive every old posting
+
+    def write():
+        compacted.write.mode("append").partitionBy("tb").parquet(path)
+        if doclens is not None:
+            doclens.write.mode("append").parquet(dl_path)
+        # persist the term dictionary (Lucene keeps one for the same
+        # reason): (term, doc_freq) folded from the compacted postings,
+        # so suggest_terms reads dictionary-sized data instead of
+        # re-deriving from all postings. Valid only while no NEW
+        # tombstones arrive — readers check for _deletes and fall back
+        # to derivation, as they do while _SUCCESS is missing (a
+        # crashed rewrite).
+        doc_col = [c for c in compacted.columns if c not in ("term", "tb", "pos")][0]
+        (
+            compacted.select(doc_col, "term")
+            .distinct()
+            .groupBy("term")
+            .agg(F.count(F.lit(1)).cast("long").alias("doc_freq"))
+            .write.mode("overwrite")
+            .parquet(f"{path}/_termdict")
+        )
+
+    _fs.rewrite_dirs(spark, dirs, write, [path, dl_path])
 
 
 def search_phrase_indexed(
@@ -557,7 +553,9 @@ def _term_dictionary(spark: SparkSession, path: str) -> DataFrame:
     (id, term) postings, so replayed idempotent appends don't inflate
     it."""
     td_path = f"{path}/_termdict"
-    if _fs.exists(spark, td_path) and not _fs.exists(spark, f"{path}/_deletes"):
+    if _fs.exists(spark, f"{td_path}/_SUCCESS") and not _fs.exists(
+        spark, f"{path}/_deletes"
+    ):
         return spark.read.parquet(td_path)
     live = _apply_deletes(spark, path, spark.read.parquet(path))
     doc_col = [c for c in live.columns if c not in ("term", "tb", "pos")][0]

@@ -134,38 +134,21 @@ def compact_snapshots(
       before the horizon now raise (their history is gone — that IS
       expiry, surfaced loudly rather than as silently wrong state).
 
-    Crash discipline (the serving-table staged-swap pattern): the base
-    writes to a dot-staging dir (invisible to partition discovery),
-    then swaps in as ``_snapshot=<upto>`` — old dirs are removed only
-    AFTER the swap, so a crash leaves either the original layout or a
-    compacted-plus-leftovers layout, both of which read correctly
-    (the base subsumes any leftover earlier dir; re-running heals)."""
+    No rename (``fs.rewrite_dirs``): the base is appended into
+    ``_snapshot=<upto>`` as new files, then the files it replaces are
+    deleted, ``<upto>``'s originals first and each earlier snapshot
+    directory whole. A crash before the deletes finish leaves the base
+    beside some originals, which reads the same latest state: each
+    leftover row either lost to its key's winner or IS the winner,
+    tying on seq with its verbatim copy in the base. A re-run folds
+    base and leftovers into the same base. A ``.compact-N.old`` park
+    left by the older rename-based compactor raises ``IOError`` with
+    every file kept."""
     from platypus_ingestion_plugins_spark.operators.cdc import last_wins
 
-    # Heal a crashed prior compaction FIRST (r12 review: the window
-    # between "old dir staged out" and "base renamed in" used to leave
-    # _snapshot=<upto> missing entirely — a silently wrong latest
-    # state with no recovery path). The park dir is the marker: if it
-    # exists and the live dir is gone, the crash hit mid-swap — put
-    # the ORIGINAL back (the staging dir's completeness is unknowable,
-    # so it is discarded, never promoted); if both exist, the swap
-    # completed and the park is garbage. Either way leftover staging
-    # is swept, so orphaned hidden dirs cannot accumulate across the
-    # early-return path either.
-    tmp_old = f"{path}/.compact-{upto}.old"
-    staging = f"{path}/.compact-{upto}.staging"
-    live = f"{path}/{SNAPSHOT_COL}={upto}"
-    if fs.exists(spark, tmp_old):
-        if not fs.exists(spark, live):
-            if not fs.rename(spark, tmp_old, live):
-                raise IOError(
-                    f"crashed compaction at {path}: could not restore "
-                    f"{live} from {tmp_old}"
-                )
-        else:
-            fs.delete(spark, tmp_old)
-    fs.delete(spark, staging)
-
+    for name in fs.list_names(spark, path):
+        if name.startswith(".compact-") and name.endswith(".old"):
+            raise fs.leftover_error(f"{path}/{name}")
     snaps = snapshot_ids(spark, path)
     if upto not in snaps:
         raise ValueError(f"snapshot {upto} does not exist at {path}; have {snaps}")
@@ -176,33 +159,15 @@ def compact_snapshots(
     # The base is the folded range's last-wins winners VERBATIM —
     # including -D tombstones. Eliding deletes looks tempting (the key
     # is gone, why keep a row?) but breaks the crash-window
-    # coexistence guarantee: a leftover earlier dir holding the key's
+    # coexistence guarantee: a leftover earlier file holding the key's
     # +I would RESURRECT it with nothing left to outrank it (caught by
     # the insert-then-delete-across-snapshots test case). A tombstone
     # at its original max seq beats any folded-range leftover, and
     # apply_changelog drops it from materialized state as always.
     base = last_wins(log.drop(SNAPSHOT_COL), key, seq_col=seq_col)
-    base.write.mode("overwrite").parquet(staging)
-    # Swap the <upto> dir FIRST, delete the earlier dirs AFTER: the
-    # base subsumes every folded row, and a leftover earlier dir
-    # coexisting with the base still reads correctly (last-wins
-    # dedups the base's max-seq +I against the original winner — same
-    # seq, same values; an original -D winner is kept VERBATIM in the
-    # base (see above), so its leftover row ties on seq with an
-    # identical tombstone and last-wins keeps either one,
-    # reproducing the pre-compaction deleted state).
-    # Deleting earlier dirs BEFORE the swap would open a crash window
-    # where <upto> holds only its own changelog and the earlier
-    # history is simply gone — a silently wrong latest state. A crash
-    # anywhere here leaves a readable layout, and re-running the same
-    # compaction heals it (base ∪ leftovers folds to the same base).
-    if not fs.rename(spark, live, tmp_old):
-        raise IOError(f"could not stage out {SNAPSHOT_COL}={upto}")
-    if not fs.rename(spark, staging, live):
-        # restore the original dir so the table stays readable
-        fs.rename(spark, tmp_old, live)
-        raise IOError(f"could not swap compacted base into {path}")
-    fs.delete(spark, tmp_old)
-    for s in fold:
-        if s != upto:
-            fs.delete(spark, f"{path}/{SNAPSHOT_COL}={s}")
+    # <upto>'s originals go first: until the earlier directories are
+    # deleted, a re-run still sees work to do and converges
+    dirs = [f"{path}/{SNAPSHOT_COL}={s}" for s in [upto] + fold[:-1]]
+    fs.rewrite_dirs(
+        spark, dirs, lambda: write_cdc_snapshot(base, path, upto), [path]
+    )

@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -19,3 +20,37 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def crash_on_old_delete(monkeypatch):
+    """``with crash_on_old_delete(root, skip=k):`` lets the first ``k``
+    ``fs.delete`` calls on files or directories that already existed
+    under ``root`` through and makes the next one raise, as if a
+    compactor died after writing its new files while dropping the old
+    ones. The block must hit that crash."""
+    from platypus_ingestion_plugins_spark import fs
+
+    @contextlib.contextmanager
+    def arm(root, skip=0):
+        old = set()
+        for dirpath, dirnames, filenames in os.walk(root):
+            old.update(os.path.join(dirpath, n) for n in dirnames + filenames)
+        real = fs.delete
+        passed = []
+
+        def delete(spark, path):
+            if path in old:
+                if len(passed) == skip:
+                    raise OSError(f"injected crash deleting {path}")
+                passed.append(path)
+            return real(spark, path)
+
+        monkeypatch.setattr(fs, "delete", delete)
+        try:
+            with pytest.raises(OSError, match="injected crash"):
+                yield
+        finally:
+            monkeypatch.setattr(fs, "delete", real)
+
+    return arm

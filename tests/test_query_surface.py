@@ -1191,22 +1191,26 @@ def test_search_phrase_indexed_matches_scan_path(spark, tmp_path):
     assert got == [1, 2, 3, 5, 7], got
 
 
-def test_term_index_delete_validation_and_crash_heal(spark, tmp_path):
+def test_term_index_delete_validation_and_crash_heal(
+    spark, tmp_path, crash_on_old_delete
+):
     """r13 self-review pins: delete_docs rejects multi-column frames;
     a wrongly-named delete table fails loudly at read (not a cryptic
-    join error); a compaction crash between the two renames (live dir
-    staged out, staging never promoted) heals on the next
-    compact_term_index call by restoring the original."""
+    join error). Compactions that die while deleting old files leave
+    every reader answering as before (tombstones still active), and
+    the re-run converges to one file per bucket. A ``{path}.old``
+    left by the older rename-based compactor is refused, files kept."""
     import os
     import shutil
 
     from platypus_ingestion_plugins_spark.serving import text_index as TI
 
     docs = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "beta gamma")], "doc_id long, text string"
+        [(1, "alpha beta"), (2, "beta gamma"), (3, "beta alpha delta")],
+        "doc_id long, text string",
     )
     idx = str(tmp_path / "vidx")
-    TI.build_term_index(docs, "text", "doc_id", idx, buckets=4)
+    TI.build_term_index(docs, "text", "doc_id", idx, buckets=4, positions=True)
 
     with pytest.raises(ValueError, match="one-column"):
         TI.delete_docs(
@@ -1217,14 +1221,59 @@ def test_term_index_delete_validation_and_crash_heal(spark, tmp_path):
         TI.search_terms_indexed(spark, idx, ["beta"]).collect()
     shutil.rmtree(f"{idx}/_deletes")
 
-    # simulate the mid-swap crash: live dir parked, staging discarded
-    os.rename(idx, f"{idx}.old")
-    TI.compact_term_index(spark, idx)  # heals, then compacts
-    got = sorted(
-        r.doc_id for r in TI.search_terms_indexed(spark, idx, ["beta"]).collect()
+    # fragment the buckets (a replayed batch), then tombstone doc 2
+    TI.build_term_index(
+        docs.filter("doc_id = 3"), "text", "doc_id", idx, buckets=4,
+        positions=True, mode="append",
     )
-    assert got == [1, 2], got
-    assert not os.path.exists(f"{idx}.old")
+    TI.delete_docs(spark, idx, spark.createDataFrame([(2,)], "doc_id long"))
+
+    def answers():
+        return (
+            sorted(r.doc_id for r in TI.search_terms_indexed(spark, idx, ["beta"]).collect()),
+            sorted((r.doc_id, r.bm25) for r in TI.bm25_indexed(spark, idx, "alpha beta").collect()),
+            sorted(r.doc_id for r in TI.search_phrase_indexed(spark, idx, "beta alpha").collect()),
+            {(r.term, r.doc_freq) for r in TI.suggest_terms(spark, idx, "beta", max_dist=1).collect()},
+        )
+
+    def bucket_files():
+        return {
+            d: [f for f in os.listdir(f"{idx}/{d}") if f.endswith(".parquet")]
+            for d in os.listdir(idx) if d.startswith("tb=")
+        }
+
+    want = answers()
+    assert want[0] == [1, 3] and want[2] == [3]
+    n_files = sum(len(f) for f in bucket_files().values())
+    with crash_on_old_delete(idx):
+        TI.compact_term_index(spark, idx)
+    assert sum(len(f) for f in bucket_files().values()) > n_files
+    assert answers() == want
+    # the next run dies one delete later: _deletes goes last, so the
+    # tombstones still hide doc 2 from the old postings left behind
+    with crash_on_old_delete(idx, skip=1):
+        TI.compact_term_index(spark, idx)
+    assert answers() == want
+    assert os.path.exists(f"{idx}/_deletes")
+    TI.compact_term_index(spark, idx)
+    assert not os.path.exists(f"{idx}/_deletes")
+    assert all(len(f) == 1 for f in bucket_files().values())
+    assert answers() == want
+    # no tombstones left: suggest now reads the persisted _termdict,
+    # which a crashed rewrite leaves valid
+    assert os.path.exists(f"{idx}/_termdict/_SUCCESS")
+    with crash_on_old_delete(idx):
+        TI.compact_term_index(spark, idx)
+    assert answers() == want
+    TI.compact_term_index(spark, idx)
+    assert all(len(f) == 1 for f in bucket_files().values())
+    assert answers() == want
+
+    shutil.copytree(idx, f"{idx}.old")
+    with pytest.raises(IOError, match=r"vidx\.old"):
+        TI.compact_term_index(spark, idx)
+    assert os.path.exists(f"{idx}.old/_term_buckets")
+    assert answers() == want
 
 
 def test_phrase_slop_and_span_near(spark, tmp_path):
