@@ -23,11 +23,6 @@ from platypus_ingestion_plugins_spark.session import ensure_parallelism
 from platypus_ingestion_plugins_spark.snapshots import SnapshotLog
 
 
-def content_hash(cols: list[str]) -> Column:
-    """Deterministic row-content hash for exact dedup."""
-    return F.sha2(F.to_json(F.struct(*[F.col(c) for c in cols])), 256)
-
-
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Collapse exact duplicates: one surviving row (min id) per
     distinct text, with the duplicate count. One shuffle on the text
@@ -551,21 +546,6 @@ def cap_shingle_df(sh: DataFrame, max_df: int | None, key_col: str = "shingle") 
     return sh.join(F.broadcast(hot), key_col, "left_anti")
 
 
-
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's optimized-plan size estimate — free (no job), file
-    size at the scan and propagated through projections/checkpoints.
-    Used to choose lazy vs eager materialization boundaries; unknown
-    stats return huge, which maps to the safe-at-scale (eager)
-    choice."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # pragma: no cover - py4j edge
-        return 1 << 62
-
-
 def _maybe_single_eval(df: DataFrame, enabled: bool) -> DataFrame:
     """Lazy localCheckpoint when ``enabled`` — the single-evaluation
     pattern for frames referenced by several subplans (AQE's runtime
@@ -860,11 +840,6 @@ def fuzzy_join(
     return _pass("prefix").unionByName(_pass("suffix")).distinct()
 
 
-def _md5_long(col: Column) -> Column:
-    """First 15 hex chars of md5 as a non-negative long (< 2^60)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def winnow_fingerprints(
     df: DataFrame, text_col: str, id_col: str, k: int = 8, w: int = 4
 ) -> DataFrame:
@@ -1090,13 +1065,13 @@ def minhash_lsh_dedup_pairs(
     The verification join is candidate-DRIVEN: the candidate pair set
     (bounded by the LSH blocking, tiny next to the corpus) is joined to
     the left doc's shingles, then intersected with the right doc's via
-    an equi-join on (id_b, shingle). The work is exactly
+    an equi-join on (id_b, shingle): exact shingle counts, no hashing,
+    and a zero-overlap pair emits no row. The work is exactly
     sum over candidate pairs of |shingles(id_a)| — the inverted-index
     self-join blowup LSH exists to avoid never materializes, and
     non-candidate docs never enter any join. This shape also references
-    the candidate subplan ONCE: the previous two-sided semi-join form
-    re-derived the whole shingle->signature->band pipeline three times
-    per action, which dominated wall time on duplicate-heavy corpora.
+    the candidate subplan ONCE, so the shingle->signature->band
+    pipeline is derived once per action.
     ``max_shingle_df`` additionally caps hot-shingle fan-out (see
     cap_shingle_df), applied before signatures so the LSH and
     verification stages see the same shingle sets.
@@ -1109,111 +1084,19 @@ def minhash_lsh_dedup_pairs(
     (bounded lifetime, leak-tested); ``single_eval=False`` chooses
     recomputation instead (see _maybe_single_eval for the
     executor-loss trade)."""
-    # size-gated materialization boundaries (r14, the AQE-broadcast
-    # decision applied to checkpoint placement): on a LARGE corpus the
-    # fused pairs job is pathological — the shingle frame's three
-    # in-job references race ahead of the lazy checkpoint's block
-    # store (each recomputing tokenize+gram), the band self-join reads
-    # sig twice, and AQE plans the verification joins blind to the
-    # candidate count (measured 79.2 s -> 39.0 s at sf10 with the
-    # three boundaries eager). On a SMALL corpus those duplicated
-    # computes cost less than the three extra materialization jobs,
-    # so the r13 lazy single-eval shape stays (bench floor unchanged).
-    # Catalyst's optimized-plan size estimate is free and survives
-    # localCheckpoint inputs; unknown stats read huge, mapping to the
-    # safe-at-scale eager choice. Threshold 2 MB (r16): the original
-    # 32 MB was calibrated only at the endpoints (584 KB sf0.1 ->
-    # exploded wins by ~0.6 s; sf10 preset -> array wins 84 -> 40 s).
-    # An interleaved A/B at the 6 MB middle (scripts/ab_minhash_gate.py,
-    # 10x replica, min-of-3 per arm in one session) read the exploded/
-    # lazy side 4.8 s vs 3.8 s on the micro query and 11.3 s vs 9.6 s
-    # (typical pass 25 s vs 9.6 s — the lazy-checkpoint recompute race)
-    # on the clean_corpus preset, so the crossover sits BELOW 6 MB.
-    # The mis-choice cost is asymmetric — bounded ~0.6 s on the small
-    # side, growing with scale on the large side — so the gate biases
-    # low: above sf0.1's plan size, below the measured-bad 6 MB point.
-    big = single_eval and _plan_size_bytes(df) >= (2 << 20)
-    sh = cap_shingle_df(shingles(df, text_col, id_col, n), max_shingle_df)
-    if single_eval:
-        sh = sh.localCheckpoint(eager=big)
+    sh = _maybe_single_eval(
+        cap_shingle_df(shingles(df, text_col, id_col, n), max_shingle_df),
+        single_eval,
+    )
     sig = minhash_from_shingles(sh, id_col, num_hashes)
-    if big:
-        sig = sig.localCheckpoint(eager=True)
     cands = lsh_candidate_pairs(sig, id_col, bands)
-    if big:
-        cands = cands.localCheckpoint(eager=True)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    if big:
-        # LARGE-corpus verify (r15): ship HASHED shingles (xxhash64:
-        # one long instead of a ~30-byte gram string through two
-        # shuffles and the pair-sized intermediate) restricted to docs
-        # that actually appear in a candidate pair — non-candidate
-        # docs never enter the joins. The intersection count over
-        # 64-bit hashes equals the count over strings up to a
-        # cross-shingle collision INSIDE one candidate pair
-        # (~|A|·|B|/2^64 per pair — vanishing), the standard trade
-        # every hashed-gram dedup makes (r15 perf: the verify stage's
-        # shuffle bytes, the sf10 preset's dominant cost).
-        sh_h = sh.select(id_col, F.xxhash64("shingle").alias("__hsh"))
-        cand_ids = cands.select(F.col("id_a").alias(id_col)).union(
-            cands.select(F.col("id_b").alias(id_col))
-        ).distinct()
-        # one hashed-shingle ARRAY per candidate doc, intersected per
-        # pair in codegen (array_intersect over unique elements == the
-        # equi-join count): the pair-sized frame is ~70x fewer rows
-        # than the exploded join intermediate (sum over pairs of
-        # |shingles|), which was the sf10 preset's dominant shuffle.
-        # Per-doc array width is bounded by the doc's token count (and
-        # cap_shingle_df bounds cross-doc fan-out); n_common > 0 keeps
-        # the inner-join semantics (a zero-overlap pair emits no row,
-        # threshold 0.0 included).
-        arrs = (
-            sh_h.join(cand_ids, id_col, "left_semi")
-            .groupBy(id_col)
-            .agg(F.collect_list("__hsh").alias("__arr"))
-            # SHUFFLE_HASH: sort-merge would sort the fat array rows
-            # twice (the attach joins' dominant cost at sf10); the
-            # hash side is one partition's worth of candidate-doc
-            # arrays — bounded
-            .hint("shuffle_hash")
-        )
-        inter = (
-            cands.join(
-                arrs.select(F.col(id_col).alias("id_a"), F.col("__arr").alias("__a")),
-                "id_a",
-            )
-            .join(
-                arrs.select(F.col(id_col).alias("id_b"), F.col("__arr").alias("__b")),
-                "id_b",
-            )
-            .select(
-                "id_a",
-                "id_b",
-                F.size(F.array_intersect("__a", "__b")).cast("long").alias("n_common"),
-            )
-            .filter(F.col("n_common") > 0)
-        )
-    else:
-        # SMALL-corpus verify (r14 shape, restored by the r16
-        # dedup_minhash_lsh bisect): candidate pairs join the left
-        # doc's shingles, then intersect with the right doc's via an
-        # equi-join on (id_b, shingle) — an inner join, so a
-        # zero-overlap pair emits no row, exactly the big path's
-        # n_common > 0. Value-identical to the hashed-array intersect
-        # (and exact — no hash anywhere); on a small corpus the array
-        # shape's three extra stages (candidate-id union+distinct,
-        # semi-join, collect_list groupBy) cost MORE than the
-        # exploded intermediate they avoid — measured 2.2 s vs 1.5 s
-        # at sf0.1, while the array shape wins 84 s -> 40 s at sf10.
-        # Same gate as the materialization boundaries above: the
-        # regime where the exploded intermediate hurts is the regime
-        # where `big` is true.
-        inter = (
-            cands.join(sh.select(F.col(id_col).alias("id_a"), "shingle"), "id_a")
-            .join(sh.select(F.col(id_col).alias("id_b"), "shingle"), ["id_b", "shingle"])
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
+    inter = (
+        cands.join(sh.select(F.col(id_col).alias("id_a"), "shingle"), "id_a")
+        .join(sh.select(F.col(id_col).alias("id_b"), "shingle"), ["id_b", "shingle"])
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
     return (
         inter.join(sizes.withColumnsRenamed({id_col: "id_a", "n_sh": "n_a"}), "id_a")
         .join(sizes.withColumnsRenamed({id_col: "id_b", "n_sh": "n_b"}), "id_b")

@@ -48,18 +48,15 @@ def clean_corpus(
     quality floor, and (when ``benchmark`` is given) decontamination.
 
     ``single_eval`` (default on) materializes the normalized and
-    exact-deduped frames with localCheckpoints so the Arrow
+    exact-deduped frames with eager localCheckpoints so the Arrow
     unicodedata UDF — the chain's priciest map stage — runs once per
-    frame instead of once per downstream reference. Above the size
-    gate (Catalyst plan estimate >= 256 KB, i.e. essentially every
-    real corpus) the checkpoints are EAGER: constructing the returned
-    DataFrame itself executes the two staging jobs and pins the
-    normalized/deduped frames in (spillable) executor storage before
-    the caller triggers any action — the price of avoiding the
-    fused-first-action recompute race (ADVICE r16 / the r14 sf10
-    note). Below the gate the boundaries stay lazy and construction
-    is action-free. The other trade (ADVICE r9): checkpointed blocks
-    have no lineage, so an executor lost mid-job fails the job
+    frame instead of once per downstream reference. Constructing the
+    returned DataFrame therefore executes the two staging jobs and
+    pins the normalized/deduped frames in (spillable) executor
+    storage before the caller triggers any action; a lazy boundary
+    would let the chain's fused first action race the block store and
+    recompute the UDF anyway. The trade (ADVICE r9): checkpointed
+    blocks have no lineage, so an executor lost mid-job fails the job
     instead of recomputing. On a fault-prone or storage-tight cluster
     pass ``single_eval=False`` to restore a purely lazy, by-need
     build (the flag also propagates to the LSH stage's shingle
@@ -75,33 +72,9 @@ def clean_corpus(
     # normalized frame is referenced by the exact-dedup aggregate,
     # its semi-join back, and the whole near-dup subchain — without
     # the checkpoint the Arrow unicodedata UDF (the chain's priciest
-    # map stage) re-runs once per reference. The boundary goes EAGER
-    # on a large corpus (the r14/r15 size gate minhash_lsh_dedup_pairs
-    # uses): lazily-checkpointed frames let the preset's fused first
-    # action race the block store and recompute the UDF anyway —
-    # measured ~20 s of the sf10 preset wall; on a small corpus the
-    # extra materialization jobs cost more than the duplicated
-    # computes, so lazy stays.
-    # threshold 256 KB, not the 32 MB this gate shipped with (r16, two
-    # re-calibrations): the sf1-replica interleaved A/B
-    # (scripts/ab_minhash_gate.py) read the lazy arm of this preset at
-    # 11.3 s min-of-3 / ~25 s typical pass vs 9.6 s eager at a 6 MB
-    # corpus — the fused-first-action recompute race the r14 note
-    # measured at sf10, an order of magnitude earlier. The decomposed
-    # 4-arm A/B (scripts/ab_preset_stage.py) then showed the preset's
-    # STAGING boundaries flip earlier than the LSH verify gate inside
-    # minhash_lsh_dedup_pairs (which stays at 2 MB): eager staging
-    # alone won every pass pairwise at a 594 KB corpus (4.04 vs 4.30 s
-    # min-of-4) while forcing the inner gate big there LOST (5.25 s).
-    # 256 KB keeps sf0.001/sf0.01 constructions action-free (the
-    # explain-audit and oracle scales) and flips everything from the
-    # bench scale up.
-    big = single_eval and dedup._plan_size_bytes(docs) >= (256 << 10)
-
+    # map stage) re-runs once per reference
     def _stage(df):
-        if not single_eval:
-            return df
-        return df.localCheckpoint(eager=big)
+        return df.localCheckpoint(eager=True) if single_eval else df
 
     normed = _stage(docs.withColumn(text_col, normalize_unicode(text_col)))
 

@@ -66,11 +66,8 @@ def build_term_index(
         raise ValueError(f"buckets must be >= 1, got {buckets}")
     spark = df.sparkSession
     sidecar_val = f"{buckets}:pos" if positions else str(buckets)
-    pinned = (
-        _fs.read_text(spark, f"{path}/{_SIDECAR}")
-        if _fs.exists(spark, f"{path}/{_SIDECAR}")
-        else None
-    )
+    marker = f"{path}/{_SIDECAR}"
+    pinned = _fs.read_text(spark, marker)
     if pinned is not None and pinned != sidecar_val:
         raise ValueError(
             f"index at {path} was written with scheme {pinned!r}, "
@@ -105,7 +102,10 @@ def build_term_index(
         # new postings invalidate the compaction-time term dictionary
         # (suggest_terms would otherwise read a stale term set)
         _fs.delete(spark, f"{path}/_termdict")
-    _fs.write_text(spark, f"{path}/{_SIDECAR}", sidecar_val)
+    if pinned is None or mode == "overwrite":
+        # the first build, or a rebuild (overwrite deleted the pin
+        # with the directory): pin once, atomically — queries read it
+        _fs.write_text_atomic(spark, marker, sidecar_val)
 
 
 def _query_buckets(

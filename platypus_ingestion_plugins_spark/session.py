@@ -137,18 +137,3 @@ def ensure_parallelism(df, min_partitions: int | None = None):
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Load driver parquet tables and register temp views; returns dict."""
-    if not names:
-        names = (
-            "region", "nation", "customer", "supplier", "part",
-            "orders", "lineitem", "events", "documents", "embeddings",
-        )
-    out = {}
-    for n in names:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))
-        df.createOrReplaceTempView(n)
-        out[n] = df
-    return out

@@ -54,6 +54,8 @@ HEADLINE = [
     "bloom_decontam",
     "quantile_sketch",
     "line_dedup",
+    # constructing pipeline_clean_corpus runs its two eager staging
+    # jobs; the audited plan is everything downstream of them
     "pipeline_clean_corpus",
     "dedup_survivors",
     "top_terms_per_group",

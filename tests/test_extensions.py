@@ -46,22 +46,60 @@ def test_minhash_lsh_finds_exact_dups(docs):
     assert {(r.id_a, r.id_b) for r in pairs} == {(1, 4)}
 
 
-def test_minhash_lsh_verify_shapes_agree(monkeypatch, docs):
-    """The r16 size-gated dual verify (the dedup_minhash_lsh bisect):
-    the small-corpus exploded equi-join and the large-corpus
-    hashed-array intersect must emit identical (id_a, id_b, jaccard)
-    rows — the gate picks a plan, never a result."""
-    from platypus_ingestion_plugins_spark.operators import dedup as D
-
-    results = {}
-    for label, size in (("small", 0), ("big", 1 << 40)):
-        monkeypatch.setattr(D, "_plan_size_bytes", lambda df, s=size: s)
-        got = D.minhash_lsh_dedup_pairs(
-            docs, "text", "doc_id", n=3, threshold=0.1
+def test_minhash_lsh_verify_matches_python_jaccard(docs):
+    """The verify is exact: of the pairs ``lsh_candidate_pairs`` yields,
+    ``minhash_lsh_dedup_pairs`` returns exactly those whose Jaccard over
+    the ``shingles`` sets (computed here in plain Python) clears the
+    threshold, with ``jaccard`` that value rounded to 6 places. One
+    hash per band makes the near-dup pairs candidates too."""
+    sets = {}
+    for r in dedup.shingles(docs, "text", "doc_id", n=3).collect():
+        sets.setdefault(r.doc_id, set()).add(r.shingle)
+    cands = {
+        (r.id_a, r.id_b)
+        for r in dedup.lsh_candidate_pairs(
+            dedup.minhash_signatures(docs, "text", "doc_id", n=3, num_hashes=16),
+            "doc_id", bands=16,
         ).collect()
-        results[label] = sorted((r.id_a, r.id_b, r.jaccard) for r in got)
-    assert results["small"] == results["big"]
-    assert results["small"]  # the fixture has near-dup pairs
+    }
+    jac = {(a, b): len(sets[a] & sets[b]) / len(sets[a] | sets[b]) for a, b in cands}
+    assert (1, 4) in cands and any(j < 1.0 for j in jac.values()), jac
+    for threshold in (0.1, 0.8):
+        got = {
+            (r.id_a, r.id_b): r.jaccard
+            for r in dedup.minhash_lsh_dedup_pairs(
+                docs, "text", "doc_id", n=3, num_hashes=16, bands=16,
+                threshold=threshold,
+            ).collect()
+        }
+        assert set(got) == {p for p, j in jac.items() if j >= threshold}, (threshold, got, jac)
+        assert got == {p: round(jac[p], 6) for p in got}
+
+
+def test_no_module_reads_plan_statistics():
+    """No package module picks a plan from Catalyst's size estimate
+    (``optimizedPlan().stats()`` / ``sizeInBytes``): a plan that
+    changes with corpus size needs a benchmark on both sides of the
+    switch, so every operator runs one plan at every size."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(dedup.__file__).resolve().parent.parent
+    found = []
+    for src in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(src.read_text(), str(src))):
+            if not isinstance(node, ast.Attribute):
+                continue
+            v = node.value
+            plan_stats = (
+                node.attr == "stats"
+                and isinstance(v, ast.Call)
+                and isinstance(v.func, ast.Attribute)
+                and v.func.attr == "optimizedPlan"
+            )
+            if plan_stats or node.attr == "sizeInBytes":
+                found.append(f"{src.relative_to(pkg)}:{node.lineno}")
+    assert found == []
 
 
 def test_dedup_family_leaves_no_leaked_storage(spark, docs):

@@ -711,6 +711,44 @@ def test_term_index_build_search_and_prune(spark, tmp_path):
         TI.read_postings_pruned(spark, idx, ["spark!"])
 
 
+def test_term_index_pin_written_once(spark, tmp_path, fs_spy):
+    """Queries read the ``_term_buckets`` scheme pin on every call, so
+    builds never rewrite it in place: the first build and an overwrite
+    (which deletes the directory) write it atomically, a same-scheme
+    append leaves it alone."""
+    from platypus_ingestion_plugins_spark import fs
+    from platypus_ingestion_plugins_spark.serving import text_index as TI
+
+    docs = spark.createDataFrame(
+        [(1, "spark shuffles data"), (2, "lucene builds indexes")],
+        "doc_id long, text string",
+    )
+    idx = str(tmp_path / "tidx")
+    marker = f"{idx}/_term_buckets"
+
+    def pin_writes(calls):
+        return [(name, args[0]) for name, args in calls if args and "_term_buckets" in str(args[0])]
+
+    calls = fs_spy()
+    TI.build_term_index(docs, "text", "doc_id", idx, buckets=4)
+    first = pin_writes(calls)
+    assert ("write_text_atomic", marker) in first and ("write_text", marker) not in first, first
+
+    calls.clear()
+    more = spark.createDataFrame([(3, "spark again")], "doc_id long, text string")
+    TI.build_term_index(more, "text", "doc_id", idx, buckets=4, mode="append")
+    assert pin_writes(calls) == [], calls
+    assert fs.read_text(spark, marker) == "4"
+    got = sorted(r.doc_id for r in TI.search_terms_indexed(spark, idx, ["spark"]).collect())
+    assert got == [1, 3], got
+
+    calls.clear()
+    TI.build_term_index(more, "text", "doc_id", idx, buckets=4, mode="overwrite")
+    assert ("write_text_atomic", marker) in pin_writes(calls), calls
+    got = sorted(r.doc_id for r in TI.search_terms_indexed(spark, idx, ["spark"]).collect())
+    assert got == [3], got
+
+
 def test_wildcard_scan_and_indexed_agree(spark, tmp_path):
     """NEW r13: WildcardQuery. The indexed rewrite (term-dictionary
     expansion -> pruned OR search) must return exactly the scan path's
