@@ -709,7 +709,7 @@ def _term_index_for(spark, sf, positions: bool) -> str:
     key = (os.path.abspath(sf), positions)
     path = _TERM_INDEX_MEMO.get(key)
     if path is not None and os.path.exists(
-        os.path.join(path, "_term_buckets")
+        os.path.join(path, "_snapshots", "LATEST")
     ):
         return path
     work = _stream_scratch("term_idx_shared_")

@@ -10,12 +10,12 @@ filesystem from the path's scheme, so ``file:/``, ``hdfs://`` and
 all behave identically from the caller's point of view.
 
 No mutable state renames its data. The serving table, streaming sketch
-state and the dedup line-count index commit by snapshot
+state, the dedup line-count index and the term index commit by snapshot
 (platypus_ingestion_plugins_spark.snapshots), the only other module
 that calls ``rename``: it renames a manifest into place if absent. The
-band-key, IVF, term-index and CDC compactors write new files beside the
-old ones and then delete the old ones (``rewrite_dirs``), as Paimon
-drops replaced data files after a commit (PaimonIngestor.java:269-276).
+band-key, IVF and CDC compactors write new files beside the old ones
+and then delete the old ones (``rewrite_dirs``), as Paimon drops
+replaced data files after a commit (PaimonIngestor.java:269-276).
 """
 
 from __future__ import annotations

@@ -6,18 +6,26 @@ semantics); `serving/query.py` answers the same queries by scanning
 the corpus, which is correct but pays O(corpus) I/O per query. This
 module materializes the posting lists once — (term, doc id) pairs,
 written PARTITIONED by a hash bucket of the term — so a term lookup
-reads only the directories its query terms can live in: the same
-literal-partition-filter file skip the band-key index and modulo
-sharding already prove with input-file metrics. At 100 TB the index
-is built incrementally per ingest batch (append mode) and a query's
-I/O tracks its term count, not the corpus.
+reads only the files of the buckets its query terms can live in. At
+100 TB the index is built incrementally per ingest batch (append mode)
+and a query's I/O tracks its term count, not the corpus.
+
+Storage: four tables on one snapshot log
+(platypus_ingestion_plugins_spark.snapshots) at the index path — the
+``tb=`` postings, the ``_doclens`` norms (positional indexes), the
+``_deletes`` tombstones and the compaction-time ``_termdict``. Every
+operation (build, ``delete_docs``, ``compact_term_index``) publishes
+one snapshot, so a reader, which pins the newest snapshot and reads
+its named files, sees all four tables before the operation or all
+after it. Reads never write. The scheme (bucket count, positional)
+is in the snapshot's metadata.
 
 Determinism: bucket = pmod(xxhash64(term), buckets) computed by Spark
 itself on BOTH the write and the read path (the read side evaluates
 the expression on a tiny in-memory frame — never a Python re-
-implementation that could drift from the JVM hash). The bucket count
-is pinned in a `_term_buckets` sidecar like the band-key index's, and
-a mismatched reader raises instead of silently pruning away matches.
+implementation that could drift from the JVM hash). A reader passing
+a bucket count other than the pinned one raises instead of silently
+pruning away matches.
 """
 
 from __future__ import annotations
@@ -27,14 +35,47 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from platypus_ingestion_plugins_spark import fs as _fs
 from platypus_ingestion_plugins_spark.serving.query import tokenize
-
-_SIDECAR = "_term_buckets"
-
+from platypus_ingestion_plugins_spark.snapshots import SnapshotLog
 
 def _term_bucket(term_col, buckets: int):
     return F.pmod(F.xxhash64(term_col), F.lit(buckets)).cast("int")
+
+
+def _log(spark: SparkSession, path: str) -> SnapshotLog:
+    # ".old": where the older rename-based compactor parked the index
+    return SnapshotLog(spark, path, leftovers=(".old",))
+
+
+def _pin(spark: SparkSession, path: str) -> tuple[SnapshotLog, dict]:
+    """The index's log and its newest snapshot, which every table a
+    reader touches is read from."""
+    log = _log(spark, path)
+    snap = log.latest()
+    if snap is None:
+        raise ValueError(f"no term index at {path}")
+    return log, snap
+
+
+def _scheme(snap: dict) -> dict:
+    """The snapshot's (bucket count, positional) pin."""
+    return {"buckets": snap["buckets"], "positions": snap["positions"]}
+
+
+def _doc_col(postings: DataFrame) -> str:
+    return [c for c in postings.columns if c not in ("term", "tb", "pos")][0]
+
+
+def _dictionary_of(postings: DataFrame) -> DataFrame:
+    """(term, doc_freq) folded from postings. doc_freq counts distinct
+    (id, term) postings, so replayed idempotent appends don't inflate
+    it."""
+    return (
+        postings.select(_doc_col(postings), "term")
+        .distinct()
+        .groupBy("term")
+        .agg(F.count(F.lit(1)).cast("long").alias("doc_freq"))
+    )
 
 
 def build_term_index(
@@ -50,28 +91,34 @@ def build_term_index(
     the shared analyzer (``serving.query.tokenize`` — the SAME
     tokenization the scan-path queries use, so indexed and scanned
     answers agree), partitioned by the term's hash bucket. One
-    explode + one partitioned write; the shuffleless layout means an
-    ingest batch appends only to the buckets its terms touch.
-    ``mode="append"`` is the incremental path (replay-safe for
-    idempotent batches only — re-appending the same batch duplicates
-    postings; the readers' DISTINCT collapses them for membership
-    semantics, like the band-key index's append discipline).
+    explode + one partitioned write, published as one snapshot.
+
+    ``mode="overwrite"`` is a rebuild: the snapshot lists only this
+    build's files (tombstones and dictionary dropped), under the
+    requested scheme whatever the old one was. ``mode="append"`` is
+    the incremental path: its files join the live ones, and the
+    compaction-time dictionary leaves the snapshot (it no longer
+    covers every term). An append with another scheme raises.
+    Appends are replay-safe for idempotent batches only —
+    re-appending the same batch duplicates postings; the readers'
+    DISTINCT collapses them for membership semantics, like the
+    band-key index's append discipline.
 
     ``positions=True`` writes one posting PER OCCURRENCE with its
     0-based token position (Lucene's positional postings) — required
-    by ``search_phrase_indexed``, ~tokens-instead-of-terms bigger.
-    The sidecar pins the choice: mixing positional and non-positional
-    appends into one index raises."""
+    by ``search_phrase_indexed``, ~tokens-instead-of-terms bigger —
+    and a ``_doclens`` side table, the BM25 length-normalization
+    input (Lucene's norms file)."""
     if buckets < 1:
         raise ValueError(f"buckets must be >= 1, got {buckets}")
-    spark = df.sparkSession
-    sidecar_val = f"{buckets}:pos" if positions else str(buckets)
-    marker = f"{path}/{_SIDECAR}"
-    pinned = _fs.read_text(spark, marker)
-    if pinned is not None and pinned != sidecar_val:
+    if mode not in ("overwrite", "append"):
+        raise ValueError(f"mode must be 'overwrite' or 'append', got {mode!r}")
+    log = _log(df.sparkSession, path)
+    snap = log.latest()
+    scheme = {"buckets": buckets, "positions": positions}
+    if mode == "append" and snap is not None and _scheme(snap) != scheme:
         raise ValueError(
-            f"index at {path} was written with scheme {pinned!r}, "
-            f"write requested {sidecar_val!r}"
+            f"index at {path} was written with {_scheme(snap)}, append requested {scheme}"
         )
     if positions:
         postings = df.select(
@@ -83,50 +130,25 @@ def build_term_index(
             F.col(id_col),
             F.explode(F.array_distinct(tokenize(text_col))).alias("term"),
         )
-    postings = postings.withColumn("tb", _term_bucket(F.col("term"), buckets))
-    # overwrite means REBUILD (all buckets + tombstones + doclens
-    # truncated): pin static partition-overwrite so a session-level
-    # dynamic mode can't leave stale postings in buckets this corpus
-    # doesn't touch
-    postings.write.mode(mode).option(
-        "partitionOverwriteMode", "static"
-    ).partitionBy("tb").parquet(path)
+    frames = {"": postings.withColumn("tb", _term_bucket(F.col("term"), buckets))}
     if positions:
-        # doc-length side table — the BM25 length-normalization input
-        # (Lucene's norms file). Written per batch like the postings;
-        # readers take it distinct, so replayed appends collapse.
-        df.select(
-            F.col(id_col), F.size(tokenize(text_col)).alias("dl")
-        ).write.mode("append").parquet(f"{path}/_doclens")
-    if mode == "append":
-        # new postings invalidate the compaction-time term dictionary
-        # (suggest_terms would otherwise read a stale term set)
-        _fs.delete(spark, f"{path}/_termdict")
-    if pinned is None or mode == "overwrite":
-        # the first build, or a rebuild (overwrite deleted the pin
-        # with the directory): pin once, atomically — queries read it
-        _fs.write_text_atomic(spark, marker, sidecar_val)
+        frames["_doclens"] = df.select(F.col(id_col), F.size(tokenize(text_col)).alias("dl"))
+    log.commit(snap, frames, scheme, "tb", None if mode == "overwrite" else ["_termdict"])
 
 
 def _query_buckets(
-    spark: SparkSession, path: str, terms: Sequence[str], buckets: int | None
-) -> tuple[list[str], list[int], int]:
-    """Resolve the pinned bucket count and compute each query term's
-    bucket VIA SPARK's own xxhash64 (a one-row local frame — no
-    executor job, no Python hash that could drift from the writer's
-    JVM hash). Returns (normalized terms, distinct buckets, buckets)."""
-    marker = f"{path}/{_SIDECAR}"
-    pinned = _fs.read_text(spark, marker)
-    if pinned is not None:
-        pinned_buckets = int(pinned.split(":", 1)[0])
-        if buckets is not None and pinned_buckets != buckets:
-            raise ValueError(
-                f"index at {path} was written with buckets={pinned_buckets}, "
-                f"read requested {buckets}"
-            )
-        buckets = pinned_buckets
-    elif buckets is None:
-        raise ValueError(f"index at {path} has no {_SIDECAR} sidecar; pass buckets")
+    log: SnapshotLog, snap: dict, terms: Sequence[str], buckets: int | None
+) -> tuple[list[str], list[int]]:
+    """Check a requested bucket count against the pinned one and
+    compute each query term's bucket VIA SPARK's own xxhash64 (a
+    one-row local frame — no executor job, no Python hash that could
+    drift from the writer's JVM hash). Returns (normalized terms,
+    distinct buckets)."""
+    if buckets is not None and buckets != snap["buckets"]:
+        raise ValueError(
+            f"index at {log.path} was written with buckets={snap['buckets']}, "
+            f"read requested {buckets}"
+        )
     from platypus_ingestion_plugins_spark.serving.query import _py_tokenize
 
     for t in terms:
@@ -142,18 +164,18 @@ def _query_buckets(
             )
     norm = sorted({t.lower() for t in terms if t})
     if not norm:
-        return [], [], buckets
+        return [], []
     row = (
-        spark.range(1)
+        log.spark.range(1)
         .select(
             *[
-                _term_bucket(F.lit(t), buckets).alias(f"b{i}")
+                _term_bucket(F.lit(t), snap["buckets"]).alias(f"b{i}")
                 for i, t in enumerate(norm)
             ]
         )
         .collect()[0]
     )
-    return norm, sorted({int(v) for v in row}), buckets
+    return norm, sorted({int(v) for v in row})
 
 
 def read_postings_pruned(
@@ -162,125 +184,90 @@ def read_postings_pruned(
     terms: Sequence[str],
     buckets: int | None = None,
 ) -> DataFrame:
-    """Pruned posting read: only the directories the query terms hash
-    into are listed/opened (literal ``tb IN (...)`` partition filter —
-    PruneFileSourcePartitions skips the rest before any data I/O), then
-    the term equality filter lands on the parquet scan. Output:
+    """Pruned posting read: only the files of the buckets the query
+    terms hash into are opened (the snapshot names them; the literal
+    ``tb IN (...)`` partition filter restates the pruning in the plan),
+    then the term equality filter lands on the parquet scan. Output:
     distinct (term, id) postings for the requested terms."""
-    scan = _pruned_scan(spark, path, terms, buckets)
-    return _apply_deletes(spark, path, scan).drop("tb").distinct()
+    return _postings(*_pin(spark, path), terms, buckets)
+
+
+def _postings(
+    log: SnapshotLog, snap: dict, terms: Sequence[str], buckets: int | None
+) -> DataFrame:
+    """``read_postings_pruned`` over a pinned snapshot."""
+    return _live(log, snap, _pruned_scan(log, snap, terms, buckets)).drop("tb").distinct()
 
 
 def _pruned_scan(
-    spark: SparkSession,
-    path: str,
-    terms: Sequence[str],
-    buckets: int | None = None,
+    log: SnapshotLog, snap: dict, terms: Sequence[str], buckets: int | None = None
 ) -> DataFrame:
     """The pre-distinct pruned scan (tb still attached) — split out so
     the file-skip test can read input_file_name BEFORE the distinct's
     exchange erases it."""
-    norm, tbs, _ = _query_buckets(spark, path, terms, buckets)
-    idx = spark.read.parquet(path)
-    if not norm:
-        return idx.limit(0)
-    return idx.filter(F.col("tb").isin(tbs) & F.col("term").isin(norm))
+    norm, tbs = _query_buckets(log, snap, terms, buckets)
+    scan = log.read(snap, [f"tb={b}" for b in tbs])
+    return scan.filter(F.col("tb").isin(tbs) & F.col("term").isin(norm))
 
 
 def delete_docs(spark: SparkSession, path: str, ids: DataFrame) -> None:
     """Logical document deletion — Lucene's tombstone model: the ids
-    land in a ``_deletes`` side table (append, cheap) and every reader
-    anti-joins them out; postings stay in place until
+    land in the ``_deletes`` side table (one appending commit, cheap)
+    and every reader anti-joins them out; postings stay in place until
     ``compact_term_index`` applies the tombstones physically. A
     physical delete-on-write would have to rewrite EVERY bucket (ids
     hash across all term buckets), which is exactly the
     write-amplification tombstones exist to avoid. ``ids`` must be a
-    one-column frame named like the index's id column. Replay-safe:
-    re-appending the same ids changes nothing (readers use distinct
-    semantics)."""
+    one-column frame named like the index's id column; anything else
+    raises before the commit. Replay-safe: re-appending the same ids
+    changes nothing (readers use distinct semantics)."""
     if len(ids.columns) != 1:
         raise ValueError(
             f"delete_docs expects a one-column id frame, got {ids.columns}"
         )
-    ids.write.mode("append").parquet(f"{path}/_deletes")
-
-
-def _apply_deletes(spark: SparkSession, path: str, postings: DataFrame) -> DataFrame:
-    """Anti-join the tombstone set out of a posting frame. The delete
-    set is broadcast (deletion lists are request-sized, not
-    corpus-sized — the reference's delete-set query shape,
-    PaimonRowProcessor.java:299-315)."""
-    if not _fs.exists(spark, f"{path}/_deletes"):
-        return postings
-    dels = spark.read.parquet(f"{path}/_deletes").distinct()
-    (id_col,) = dels.columns
-    if id_col not in postings.columns:
+    log, snap = _pin(spark, path)
+    (id_col,) = ids.columns
+    fields = [f["name"] for f in snap["schema"]["fields"]]
+    if id_col not in fields:
         raise ValueError(
-            f"delete table at {path}/_deletes is keyed on {id_col!r}, "
-            f"which the index postings lack ({postings.columns}) — "
-            "delete_docs was fed a wrongly-named id frame"
+            f"delete_docs got ids keyed on {id_col!r}, which the index "
+            f"postings at {path} lack ({fields}) — a wrongly-named id frame"
         )
-    return postings.join(F.broadcast(dels), id_col, "left_anti")
+    log.commit(snap, {"_deletes": ids}, _scheme(snap), replace=[])
+
+
+def _live(log: SnapshotLog, snap: dict, frame: DataFrame) -> DataFrame:
+    """Anti-join the snapshot's tombstone set out of a posting or
+    doclens frame. The delete set is broadcast (deletion lists are
+    request-sized, not corpus-sized — the reference's delete-set query
+    shape, PaimonRowProcessor.java:299-315)."""
+    if not snap["files"].get("_deletes"):
+        return frame
+    dels = log.read(snap, table="_deletes").distinct()
+    return frame.join(F.broadcast(dels), dels.columns[0], "left_anti")
 
 
 def compact_term_index(spark: SparkSession, path: str) -> None:
     """Physical compaction: fold the accumulated per-batch posting
-    files into one distinct posting set per bucket, applying the
-    tombstones for real, then drop the delete side table.
+    files into one distinct posting set per bucket and the norms into
+    one distinct doclens set, applying the tombstones for real, and
+    persist the term dictionary. One snapshot replaces postings and
+    doclens with the folded rows, lists the new ``_termdict`` and
+    drops ``_deletes``: a crash before it publishes leaves the index
+    as it was, and the next commit deletes the unpublished files.
     Steady-state append+compact keeps files-per-bucket plateaued, the
     band-key-index policy.
 
-    No rename (``fs.rewrite_dirs``): the compacted postings and
-    ``_doclens`` are appended beside the old files, the term
-    dictionary is rewritten, then the old files are deleted,
-    ``_deletes`` last. A crash before the deletes finish leaves old
-    and new files side by side, which read the same: postings and
-    ``_doclens`` are read distinct, and the tombstones stay active
-    until every old file is gone. A re-run compacts both. A
-    ``{path}.old`` left by the older rename-based compactor raises
-    ``IOError`` with every file kept."""
-    old = f"{path}.old"
-    if _fs.exists(spark, old):
-        raise _fs.leftover_error(old)
-    if not _fs.exists(spark, path):
-        raise ValueError(f"no term index at {path}")
-    if _fs.read_text(spark, f"{path}/{_SIDECAR}") is None:
-        raise ValueError(f"no {_SIDECAR} sidecar at {path}; not a term index")
-    compacted = _apply_deletes(spark, path, spark.read.parquet(path)).distinct()
-    dl_path = f"{path}/_doclens"
-    dirs = [
-        f"{path}/{n}" for n in sorted(_fs.list_names(spark, path)) if n.startswith("tb=")
-    ]
-    # fold the norms table the same way: tombstones applied,
-    # replayed-append duplicates collapsed
-    doclens = None
-    if _fs.exists(spark, dl_path):
-        doclens = _apply_deletes(spark, path, spark.read.parquet(dl_path).distinct())
-        dirs.append(dl_path)
-    dirs.append(f"{path}/_deletes")  # last: tombstones outlive every old posting
-
-    def write():
-        compacted.write.mode("append").partitionBy("tb").parquet(path)
-        if doclens is not None:
-            doclens.write.mode("append").parquet(dl_path)
-        # persist the term dictionary (Lucene keeps one for the same
-        # reason): (term, doc_freq) folded from the compacted postings,
-        # so suggest_terms reads dictionary-sized data instead of
-        # re-deriving from all postings. Valid only while no NEW
-        # tombstones arrive — readers check for _deletes and fall back
-        # to derivation, as they do while _SUCCESS is missing (a
-        # crashed rewrite).
-        doc_col = [c for c in compacted.columns if c not in ("term", "tb", "pos")][0]
-        (
-            compacted.select(doc_col, "term")
-            .distinct()
-            .groupBy("term")
-            .agg(F.count(F.lit(1)).cast("long").alias("doc_freq"))
-            .write.mode("overwrite")
-            .parquet(f"{path}/_termdict")
-        )
-
-    _fs.rewrite_dirs(spark, dirs, write, [path, dl_path])
+    The dictionary, (term, doc_freq) folded from the compacted
+    postings, is what Lucene keeps for the same reason: multi-term
+    rewrites and suggesters read dictionary-sized data instead of
+    re-deriving it from all postings."""
+    log, snap = _pin(spark, path)
+    postings = _live(log, snap, log.read(snap)).distinct()
+    frames = {"": postings, "_termdict": _dictionary_of(postings)}
+    if snap["positions"]:
+        frames["_doclens"] = _live(log, snap, log.read(snap, table="_doclens").distinct())
+    log.commit(snap, frames, _scheme(snap), "tb")
 
 
 def search_phrase_indexed(
@@ -508,18 +495,14 @@ def bm25_indexed(
     toks = sorted(set(_py_tokenize(query)))
     if not toks:
         raise ValueError("empty query after analysis")
-    postings = read_postings_pruned(spark, path, toks, buckets)
-    if "pos" not in postings.columns:
+    log, snap = _pin(spark, path)
+    if not snap["positions"]:
         raise ValueError(
             f"index at {path} has no positions; BM25 needs per-occurrence "
             "postings — build with positions=True"
         )
-    dl_path = f"{path}/_doclens"
-    if not _fs.exists(spark, dl_path):
-        raise ValueError(f"no _doclens table at {path}; rebuild with positions=True")
-    doclens = _apply_deletes(
-        spark, path, spark.read.parquet(dl_path).distinct()
-    )
+    postings = _postings(log, snap, toks, buckets)
+    doclens = _live(log, snap, log.read(snap, table="_doclens").distinct())
     stats = doclens.agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
     )
@@ -542,29 +525,86 @@ def bm25_indexed(
     return scored.groupBy(id_col).agg(F.round(F.sum("__w"), 6).alias("bm25"))
 
 
-def _term_dictionary(spark: SparkSession, path: str) -> DataFrame:
+def _term_dictionary(log: SnapshotLog, snap: dict) -> DataFrame:
     """The (term, doc_freq) dictionary every multi-term rewrite
-    (fuzzy, wildcard) expands against: the ``_termdict`` side table
-    ``compact_term_index`` persists whenever it is fresh (Lucene keeps
-    a term dictionary for the same reason); post-compaction appends or
-    live tombstones (``_deletes`` present) invalidate it and the
-    dictionary is re-derived by one scan over the postings (index ≪
-    corpus text), so answers are never stale. doc_freq counts distinct
-    (id, term) postings, so replayed idempotent appends don't inflate
-    it."""
-    td_path = f"{path}/_termdict"
-    if _fs.exists(spark, f"{td_path}/_SUCCESS") and not _fs.exists(
-        spark, f"{path}/_deletes"
-    ):
-        return spark.read.parquet(td_path)
-    live = _apply_deletes(spark, path, spark.read.parquet(path))
-    doc_col = [c for c in live.columns if c not in ("term", "tb", "pos")][0]
-    return (
-        live.select(doc_col, "term")
-        .distinct()
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).cast("long").alias("doc_freq"))
+    (fuzzy, wildcard) expands against: the ``_termdict`` table
+    ``compact_term_index`` persists, while it is fresh — the snapshot
+    lists its files and no tombstones (an append drops it from the
+    snapshot). Otherwise the dictionary is re-derived by one scan over
+    the snapshot's postings (index ≪ corpus text), so answers are never
+    stale."""
+    if snap["files"].get("_termdict") and not snap["files"].get("_deletes"):
+        return log.read(snap, table="_termdict")
+    return _dictionary_of(_live(log, snap, log.read(snap)))
+
+
+def _expand(
+    log: SnapshotLog, snap: dict, rewrite: tuple, max_expansions: int
+) -> list[str]:
+    """Step 1 of a multi-term rewrite: the sorted dictionary terms
+    matching ``rewrite`` = (predicate, what, fix) in the pinned
+    snapshot — dictionary-sized I/O, never the corpus. Capped like
+    Lucene's BooleanQuery rewrite (TooManyClauses at 1024 by default):
+    raising beats silently answering with a truncated term set, which
+    would drop matching documents."""
+    if max_expansions < 1:
+        raise ValueError(f"max_expansions must be >= 1, got {max_expansions}")
+    pred, what, fix = rewrite
+    got = (
+        _term_dictionary(log, snap)
+        .filter(pred)
+        .select("term")
+        .orderBy("term")
+        .limit(max_expansions + 1)
+        .collect()
     )
+    if len(got) > max_expansions:
+        raise ValueError(
+            f"{what} expands to more than {max_expansions} terms (Lucene "
+            f"TooManyClauses) — {fix} or raise max_expansions"
+        )
+    return [r["term"] for r in got]
+
+
+def _wildcard(pattern: str) -> tuple:
+    from platypus_ingestion_plugins_spark.serving.query import wildcard_regex
+
+    rx = wildcard_regex(pattern)
+    return F.col("term").rlike(rx), f"wildcard {pattern!r}", "tighten the pattern"
+
+
+def _regexp(regex: str) -> tuple:
+    from platypus_ingestion_plugins_spark.serving.query import regexp_term_regex
+
+    rx = regexp_term_regex(regex)
+    return F.col("term").rlike(rx), f"regexp {regex!r}", "tighten the pattern"
+
+
+def _prefix(prefix: str) -> tuple:
+    from platypus_ingestion_plugins_spark.serving.query import _py_tokenize
+
+    # analyze the prefix with the index's analyzer (the span_near
+    # lesson): 'spark,' would otherwise keep its comma and silently
+    # match no dictionary term; a multi-token prefix is a phrase, not
+    # a prefix — both raise
+    analyzed = _py_tokenize(prefix)
+    if len(analyzed) != 1:
+        raise ValueError(
+            f"empty prefix or multi-token prefix {prefix!r} "
+            f"(analyzes to {len(analyzed)} tokens)"
+        )
+    return F.col("term").startswith(analyzed[0]), f"prefix {prefix!r}", "lengthen the prefix"
+
+
+def _search_expanded(
+    spark: SparkSession, path: str, rewrite: tuple, max_expansions: int,
+    id_col: str, buckets: int | None,
+) -> DataFrame:
+    """Expansion then one pruned OR posting read, both from one pinned
+    snapshot."""
+    log, snap = _pin(spark, path)
+    terms = _expand(log, snap, rewrite, max_expansions)
+    return _search_terms(log, snap, terms, id_col, False, buckets)
 
 
 def expand_wildcard(
@@ -576,31 +616,9 @@ def expand_wildcard(
     """Lucene WildcardQuery rewrite, step 1: expand the pattern
     against the term DICTIONARY (``*`` = any run, ``?`` = one char,
     pattern lowercased to the analyzer's terms) into a concrete term
-    list — dictionary-sized I/O, never the corpus. Expansion is capped
-    like Lucene's BooleanQuery rewrite (TooManyClauses at 1024 by
-    default): raising beats silently answering with a truncated term
-    set, which would drop matching documents. Returns the sorted
-    matched terms."""
-    if max_expansions < 1:
-        raise ValueError(f"max_expansions must be >= 1, got {max_expansions}")
-    from platypus_ingestion_plugins_spark.serving.query import wildcard_regex
-
-    rx = wildcard_regex(pattern)
-    got = (
-        _term_dictionary(spark, path)
-        .filter(F.col("term").rlike(rx))
-        .select("term")
-        .orderBy("term")
-        .limit(max_expansions + 1)
-        .collect()
-    )
-    if len(got) > max_expansions:
-        raise ValueError(
-            f"wildcard {pattern!r} expands to more than {max_expansions} "
-            "terms (Lucene TooManyClauses) — tighten the pattern or raise "
-            "max_expansions"
-        )
-    return [r["term"] for r in got]
+    list — dictionary-sized I/O, never the corpus, TooManyClauses-
+    capped. Returns the sorted matched terms."""
+    return _expand(*_pin(spark, path), _wildcard(pattern), max_expansions)
 
 
 def search_wildcard_indexed(
@@ -617,8 +635,7 @@ def search_wildcard_indexed(
     is the count of distinct matching terms per document). Query I/O =
     dictionary + the matched terms' buckets; the corpus text is never
     touched. Scan-path twin: ``query.match_wildcard``."""
-    terms = expand_wildcard(spark, path, pattern, max_expansions)
-    return search_terms_indexed(spark, path, terms, id_col=id_col, buckets=buckets)
+    return _search_expanded(spark, path, _wildcard(pattern), max_expansions, id_col, buckets)
 
 
 def expand_regexp(
@@ -633,28 +650,7 @@ def expand_regexp(
     capped by the same TooManyClauses rule as ``expand_wildcard``
     (raising beats a silently truncated answer). Returns the sorted
     matched terms."""
-    if max_expansions < 1:
-        raise ValueError(f"max_expansions must be >= 1, got {max_expansions}")
-    from platypus_ingestion_plugins_spark.serving.query import (
-        regexp_term_regex,
-    )
-
-    rx = regexp_term_regex(regex)
-    got = (
-        _term_dictionary(spark, path)
-        .filter(F.col("term").rlike(rx))
-        .select("term")
-        .orderBy("term")
-        .limit(max_expansions + 1)
-        .collect()
-    )
-    if len(got) > max_expansions:
-        raise ValueError(
-            f"regexp {regex!r} expands to more than {max_expansions} "
-            "terms (Lucene TooManyClauses) — tighten the pattern or raise "
-            "max_expansions"
-        )
-    return [r["term"] for r in got]
+    return _expand(*_pin(spark, path), _regexp(regex), max_expansions)
 
 
 def search_regexp_indexed(
@@ -673,8 +669,7 @@ def search_regexp_indexed(
     Scan-path twin: ``query.match_regexp``. A regexp matching zero
     dictionary terms returns an empty frame (Lucene: no clause, no
     hit)."""
-    terms = expand_regexp(spark, path, regex, max_expansions)
-    return search_terms_indexed(spark, path, terms, id_col=id_col, buckets=buckets)
+    return _search_expanded(spark, path, _regexp(regex), max_expansions, id_col, buckets)
 
 
 def expand_prefix(
@@ -690,36 +685,7 @@ def expand_prefix(
     dictionary-sized I/O), TooManyClauses-capped like wildcard/regexp.
     Returns the sorted matched terms; an empty or non-analyzable
     prefix raises (a PrefixQuery for '' is a disguised match-all)."""
-    if max_expansions < 1:
-        raise ValueError(f"max_expansions must be >= 1, got {max_expansions}")
-    from platypus_ingestion_plugins_spark.serving.query import _py_tokenize
-
-    # analyze the prefix with the index's analyzer (the span_near
-    # lesson): 'spark,' would otherwise keep its comma and silently
-    # match no dictionary term; a multi-token prefix is a phrase, not
-    # a prefix — both raise
-    analyzed = _py_tokenize(prefix)
-    if len(analyzed) != 1:
-        raise ValueError(
-            f"empty prefix or multi-token prefix {prefix!r} "
-            f"(analyzes to {len(analyzed)} tokens)"
-        )
-    p = analyzed[0]
-    got = (
-        _term_dictionary(spark, path)
-        .filter(F.col("term").startswith(p))
-        .select("term")
-        .orderBy("term")
-        .limit(max_expansions + 1)
-        .collect()
-    )
-    if len(got) > max_expansions:
-        raise ValueError(
-            f"prefix {prefix!r} expands to more than {max_expansions} "
-            "terms (Lucene TooManyClauses) — lengthen the prefix or raise "
-            "max_expansions"
-        )
-    return [r["term"] for r in got]
+    return _expand(*_pin(spark, path), _prefix(prefix), max_expansions)
 
 
 def search_prefix_indexed(
@@ -735,8 +701,7 @@ def search_prefix_indexed(
     the matched terms (``search_terms_indexed`` OR semantics —
     n_matched counts distinct matching terms per doc). Scan-path
     twin: ``query.match_prefix``."""
-    terms = expand_prefix(spark, path, prefix, max_expansions)
-    return search_terms_indexed(spark, path, terms, id_col=id_col, buckets=buckets)
+    return _search_expanded(spark, path, _prefix(prefix), max_expansions, id_col, buckets)
 
 
 def term_index_stats(spark: SparkSession, path: str) -> DataFrame:
@@ -750,16 +715,13 @@ def term_index_stats(spark: SparkSession, path: str) -> DataFrame:
 
     One postings scan + the slim side tables; n_postings counts what
     a reader sees — (id, term) for a flat index, (id, term, pos) for
-    a positional one. n_docs prefers the ``_doclens`` table (present
-    on positional indexes; it also counts zero-token docs) and falls
-    back to distinct posting ids."""
-    pinned = _fs.read_text(spark, f"{path}/{_SIDECAR}")
-    if pinned is None:
-        raise ValueError(f"no {_SIDECAR} sidecar at {path}; not a term index")
-    buckets = int(pinned.split(":", 1)[0])
-    positional = pinned.endswith(":pos")
-    live = _apply_deletes(spark, path, spark.read.parquet(path))
-    doc_col = [c for c in live.columns if c not in ("term", "tb", "pos")][0]
+    a positional one. n_docs counts the ``_doclens`` table on a
+    positional index (it also counts zero-token docs) and distinct
+    posting ids on a flat one."""
+    log, snap = _pin(spark, path)
+    positional = snap["positions"]
+    live = _live(log, snap, log.read(snap))
+    doc_col = _doc_col(live)
     cols = [doc_col, "term"] + (["pos"] if positional else [])
     postings = live.select(*cols).distinct()
     agg = postings.agg(
@@ -767,10 +729,9 @@ def term_index_stats(spark: SparkSession, path: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_postings"),
         F.count_distinct(doc_col).cast("long").alias("_pdocs"),
     )
-    dl_path = f"{path}/_doclens"
-    if _fs.exists(spark, dl_path):
+    if positional:
         n_docs = (
-            _apply_deletes(spark, path, spark.read.parquet(dl_path))
+            _live(log, snap, log.read(snap, table="_doclens"))
             .select(doc_col)
             .distinct()
             .count()
@@ -778,14 +739,13 @@ def term_index_stats(spark: SparkSession, path: str) -> DataFrame:
         agg = agg.withColumn("n_docs", F.lit(int(n_docs)).cast("long"))
     else:
         agg = agg.withColumn("n_docs", F.col("_pdocs"))
-    del_path = f"{path}/_deletes"
     n_deleted = (
-        spark.read.parquet(del_path).distinct().count()
-        if _fs.exists(spark, del_path)
+        log.read(snap, table="_deletes").distinct().count()
+        if snap["files"].get("_deletes")
         else 0
     )
     return agg.select(
-        F.lit(buckets).cast("int").alias("buckets"),
+        F.lit(snap["buckets"]).cast("int").alias("buckets"),
         F.lit(positional).alias("positional"),
         "n_terms",
         "n_postings",
@@ -914,19 +874,19 @@ def more_like_this_indexed(
             "like_text has no analyzed terms at min_term_freq "
             f"{min_term_freq}"
         )
-    dl_path = f"{path}/_doclens"
-    if not _fs.exists(spark, dl_path):
+    log, snap = _pin(spark, path)
+    if not snap["positions"]:
         raise ValueError(
             f"no _doclens table at {path}; more_like_this_indexed needs "
             "a positional index (positions=True)"
         )
     n_docs = (
-        _apply_deletes(spark, path, spark.read.parquet(dl_path))
+        _live(log, snap, log.read(snap, table="_doclens"))
         .select(id_col)
         .distinct()
         .count()
     )
-    matches = read_postings_pruned(spark, path, cand, buckets).select(
+    matches = _postings(log, snap, cand, buckets).select(
         id_col, "term"
     ).distinct()
     dfc = matches.groupBy("term").agg(
@@ -970,17 +930,18 @@ def suggest_terms(
     by (distance asc, doc-frequency desc, term asc) — a total order,
     so the top-``top`` cut is deterministic. The candidate set is the
     term DICTIONARY, never the corpus text: ``compact_term_index``
-    persists a ``_termdict`` side table (Lucene keeps one for the same
-    reason), and suggest reads THAT — dictionary-sized I/O — whenever
-    it is fresh; post-compaction appends or tombstones (``_deletes``
-    present) invalidate it and the dictionary is re-derived by one
-    scan over the postings (index ≪ corpus text) so answers are never
-    stale. ``levenshtein`` is a JVM codegen builtin on both engines.
+    persists a ``_termdict`` table (Lucene keeps one for the same
+    reason), and suggest reads THAT — dictionary-sized I/O — while the
+    pinned snapshot lists it and no tombstones; after a post-compaction
+    append (whose snapshot drops it) or ``delete_docs`` the dictionary
+    is re-derived by one scan over the postings (index ≪ corpus text)
+    so answers are never stale. ``levenshtein`` is a JVM codegen
+    builtin on both engines.
     doc_freq counts distinct posting rows, so re-appended idempotent
     batches don't inflate it. Output: (term, doc_freq, dist)."""
     if max_dist < 0 or top < 1:
         raise ValueError(f"need max_dist >= 0 and top >= 1, got {max_dist}/{top}")
-    dictionary = _term_dictionary(spark, path)
+    dictionary = _term_dictionary(*_pin(spark, path))
     q = query_term.lower()
     return (
         dictionary.withColumn(
@@ -1025,7 +986,7 @@ def did_you_mean(
     qf = spark.createDataFrame(
         [(i, t) for i, t in enumerate(toks)], "pos int, qterm string"
     )
-    dic = _term_dictionary(spark, path)
+    dic = _term_dictionary(*_pin(spark, path))
     cand = (
         dic.crossJoin(F.broadcast(qf))
         .withColumn(
@@ -1071,8 +1032,16 @@ def search_terms_indexed(
     terms' buckets, never the corpus. Results are engine-checkable:
     same analyzer as the scan path, so
     ``search_terms_indexed(ANY) == df.filter(match_text(...))`` ids."""
+    return _search_terms(*_pin(spark, path), terms, id_col, require_all, buckets)
+
+
+def _search_terms(
+    log: SnapshotLog, snap: dict, terms: Sequence[str], id_col: str,
+    require_all: bool, buckets: int | None,
+) -> DataFrame:
+    """``search_terms_indexed`` over a pinned snapshot."""
     norm = sorted({t.lower() for t in terms if t})
-    postings = read_postings_pruned(spark, path, norm, buckets)
+    postings = _postings(log, snap, norm, buckets)
     agged = postings.groupBy(F.col(id_col)).agg(
         F.countDistinct("term").cast("int").alias("n_matched")
     )

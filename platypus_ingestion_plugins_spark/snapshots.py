@@ -1,15 +1,16 @@
-"""Snapshot commits over immutable files: the one commit mechanism of
-every mutable state in the package (the serving table, streaming
-sketch state, the dedup line-count index), after Paimon's
-(PaimonIngestor.java:269-276).
+"""Snapshot commits over immutable files, after Paimon's
+(PaimonIngestor.java:269-276). Their users: the serving table,
+streaming sketch state, the dedup line-count index and the term index.
 
 - Data files are immutable and uniquely named (Spark's per-job file
-  names), in ``{path}/`` or one level of partition directories
-  (``{path}/k=v/``).
+  names). The root table's are in ``{path}/`` or one level of partition
+  directories (``{path}/k=v/``); a state may keep unpartitioned
+  sub-tables of their own schemas beside it (``{path}/_name/``).
 - Commit N+1 writes ``{path}/_snapshots/N+1.json`` (the live files per
-  directory, their schema and the caller's metadata) to a temp name and
-  renames it into place only if N+1 is absent. That rename is the
-  commit. ``_snapshots/LATEST`` is a hint a reader starts from.
+  directory, each table's schema and the caller's metadata) to a temp
+  name and renames it into place only if N+1 is absent. That rename is
+  the commit, so the tables one commit writes become visible together.
+  ``_snapshots/LATEST`` is a hint a reader starts from.
 - A reader pins the newest snapshot and scans its explicit file list:
   no directory listing, no recovery, no writes. A crashed writer leaves
   only files no snapshot references; the next commit deletes them.
@@ -54,13 +55,14 @@ class SnapshotLog:
         """A snapshot directory key ("" is the root) as a path."""
         return f"{self.path}/{d}" if d else self.path
 
-    def _on_disk(self, dirs: list[str] | None = None) -> dict[str, set[str]]:
+    def _on_disk(self, dirs: list[str] | None = None, tables=()) -> dict[str, set[str]]:
         """The parquet file names in each of ``dirs``; None lists the
-        root and every partition directory in it."""
+        root, every partition directory in it and those of ``tables``
+        (sub-table names) it holds."""
         listed = {}
         if dirs is None:
             listed[""] = fs.list_names(self.spark, self.path)
-            dirs = [n for n in listed[""] if "=" in n]
+            dirs = [n for n in listed[""] if "=" in n or n in tables]
         listed.update((d, fs.list_names(self.spark, self._dir(d))) for d in dirs)
         return {d: {n for n in names if n.endswith(".parquet")} for d, names in listed.items()}
 
@@ -88,20 +90,22 @@ class SnapshotLog:
             if hint == seen:
                 raise FileNotFoundError(f"{self.path}: snapshot {n} is missing")
 
-    def read(self, snap: dict, dirs: list[str] | None = None) -> DataFrame:
-        """The rows of ``snap``'s files (only those in ``dirs`` when
-        given) under its schema, partition columns included; no files is
-        an empty frame."""
-        schema = T.StructType.fromJson(snap["schema"])
-        paths = [
-            f"{self._dir(d)}/{n}"
-            for d, names in sorted(snap["files"].items())
-            if dirs is None or d in dirs
-            for n in names
-        ]
+    def read(self, snap: dict, dirs: list[str] | None = None, table: str = "") -> DataFrame:
+        """The rows of ``snap``'s table ``table`` ("" the root, else a
+        sub-table it has written) under its schema: for the root, only
+        the files in ``dirs`` when given, partition columns included. No
+        files is an empty frame."""
+        tables = snap.get("tables", {})
+        if table:
+            schema, dirs = tables[table], [table]
+        else:
+            schema = snap["schema"]
+            dirs = [d for d in snap["files"] if d not in tables and (dirs is None or d in dirs)]
+        paths = [f"{self._dir(d)}/{n}" for d in sorted(dirs) for n in snap["files"].get(d, ())]
+        schema = T.StructType.fromJson(schema)
         if not paths:
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).option("basePath", self.path).parquet(*paths)
+        return self.spark.read.schema(schema).option("basePath", self._dir(table)).parquet(*paths)
 
     def _claim(self) -> None:
         """Before the first commit: refuse a directory that holds files
@@ -121,46 +125,58 @@ class SnapshotLog:
     def commit(
         self,
         snap: dict | None,
-        df: DataFrame,
+        df: DataFrame | dict[str, DataFrame],
         meta: dict,
         partition_by: str | None = None,
         replace: list[str] | None = None,
     ) -> dict:
-        """Append ``df`` (partitioned by ``partition_by``) as new files
-        and publish the snapshot after ``snap`` with ``meta``; returns
-        it. ``replace`` names the directories whose files in ``snap``
-        the new ones replace: None is every directory, ``[]`` none (an
-        append), a list exactly those ("__bucket=3", "" for the root).
+        """Append ``df`` as new files and publish the snapshot after
+        ``snap`` with ``meta``; returns it. ``df`` is the root table's
+        frame, or a dict of frames by table: "" the root, any other name
+        a sub-table written to ``{path}/{name}/``. ``partition_by``
+        partitions the root frame. ``replace`` names the directories
+        whose files in ``snap`` the new ones replace: None is every
+        directory, ``[]`` none (an append), a list exactly those
+        ("__bucket=3", "" for the root, "_termdict" for a sub-table). A
+        list naming root directories ("" or "k=v") says the root frame
+        writes only into those.
 
         Garbage is the parquet on disk that ``snap`` does not reference:
         the files the commit that made ``snap`` replaced, and a crashed
         commit's leftovers. It is deleted after the write, so a reader
         pinned to the snapshot before ``snap`` has the whole write to
-        finish. With a list, only its directories and those ``snap``'s
-        commit replaced are listed: leftovers elsewhere are never read
-        and go when their directory is next rewritten. The listing
-        before the write tells this commit's new files apart from
-        leftovers."""
+        finish. With a list, only the directories written, its own and
+        those ``snap``'s commit replaced are listed: leftovers elsewhere
+        are never read and go when their directory is next rewritten.
+        The listing before the write tells this commit's new files apart
+        from leftovers."""
+        frames = df if isinstance(df, dict) else {"": df}
         live = snap["files"] if snap else {}
         # a snapshot without "replaced" (written before it was recorded)
         # gets the whole-table scan
         replaced = snap.get("replaced") if snap else None
+        # every sub-table ever written keeps its schema, so a full
+        # listing finds the files of one a commit dropped
+        tables = dict(snap.get("tables", {})) if snap else {}
+        tables.update((t, f.schema.jsonValue()) for t, f in frames.items() if t)
+        parts = [d for d in replace or () if d == "" or "=" in d]
+        written = None if "" in frames and not parts else parts + [t for t in frames if t]
         if snap is None:
             self._claim()
-        if not replace or replaced is None:
-            on_disk = self._on_disk()
+        if written is None or replaced is None:
+            on_disk = self._on_disk(None, tables)
         else:
-            on_disk = self._on_disk(sorted(set(replace) | set(replaced)))
-        # a crashed Spark write's task output: the next append's job
-        # commit would otherwise move it into the data directories
-        fs.delete(self.spark, f"{self.path}/_temporary")
+            on_disk = self._on_disk(sorted(set(written) | set(replace or ()) | set(replaced)))
+        for t, frame in frames.items():
+            # a crashed Spark write's task output: the next append's job
+            # commit would otherwise move it into the data directories
+            fs.delete(self.spark, f"{self._dir(t)}/_temporary")
+            writer = frame.write.mode("append")
+            if partition_by and not t:
+                writer = writer.partitionBy(partition_by)
+            writer.parquet(self._dir(t))
 
-        writer = df.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(self.path)
-
-        after = self._on_disk(replace or None)
+        after = self._on_disk(written, tables)
         files = {} if replace is None else {d: f for d, f in live.items() if d not in replace}
         for d, names in after.items():
             new = names - on_disk.get(d, set())
@@ -170,14 +186,19 @@ class SnapshotLog:
             for name in sorted(names - set(live.get(d, ()))):
                 fs.delete(self.spark, f"{self._dir(d)}/{name}")
 
-        # partition columns read back last, so the schema lists them last
-        fields = sorted(df.schema.fields, key=lambda f: f.name == partition_by)
+        if "" in frames:
+            # partition columns read back last, so the schema lists them last
+            fields = sorted(frames[""].schema.fields, key=lambda f: f.name == partition_by)
+            schema = T.StructType(fields).jsonValue()
+        else:
+            schema = snap["schema"]
         n = (snap["id"] if snap else 0) + 1
         new_snap = {
             "id": n,
             "files": files,
             "replaced": replace,
-            "schema": T.StructType(fields).jsonValue(),
+            "schema": schema,
+            "tables": tables,
             **meta,
         }
         tmp = self._file(n) + ".tmp"

@@ -455,5 +455,5 @@ def test_text_index_query_plans(spark, tmp_path):
         assert "BatchEvalPython" not in p, p      # no row-Python anywhere
         assert "CartesianProduct" not in p, p
     # the scan carries the literal bucket partition filter
-    p = _formatted_plan(TI._pruned_scan(spark, idx, ["shared"]))
+    p = _formatted_plan(TI._pruned_scan(*TI._pin(spark, idx), ["shared"]))
     assert "PartitionFilters" in p and "tb" in p, p

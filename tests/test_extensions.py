@@ -1507,8 +1507,11 @@ def test_band_key_index_heal_idempotent_under_repeated_crashes(
 def test_compactors_never_rename(spark, tmp_path, monkeypatch):
     """The band-key, IVF, term-index and CDC compactors write new files
     beside the old ones and then delete the old ones: compacting a
-    fragmented toy index of each kind calls neither ``fs.rename`` nor
-    ``fs._rename_or_raise``."""
+    fragmented toy index of each kind renames no data file or
+    directory. The band-key, IVF and CDC compactors call neither
+    ``fs.rename`` nor ``fs._rename_or_raise``; the term index's
+    compaction renames only its snapshot manifest and hint into
+    ``_snapshots/``."""
     import os
 
     from platypus_ingestion_plugins_spark import fs
@@ -1554,12 +1557,16 @@ def test_compactors_never_rename(spark, tmp_path, monkeypatch):
         monkeypatch.setattr(fs, name, spy)
     assert dedup.compact_band_key_index(spark, band, max_files_per_dir=1)
     assert similarity.compact_ivf_partitioned(spark, ivf, max_files_per_dir=1)
-    TI.compact_term_index(spark, term)
     cdc_table.compact_snapshots(spark, log, upto=2, key="id")
     assert calls == []
+    TI.compact_term_index(spark, term)
+    assert calls and all(
+        src.startswith(f"{term}/_snapshots/") and dst.startswith(f"{term}/_snapshots/")
+        for _, src, dst in calls
+    ), calls
     # and each compaction did its work
     assert not os.path.exists(f"{log}/_snapshot=1")
-    assert not os.path.exists(f"{term}/_deletes")
+    assert TI.term_index_stats(spark, term).first().n_deleted == 0
 
 
 def test_line_dedup_boilerplate_scrub(spark):

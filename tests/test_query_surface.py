@@ -659,18 +659,19 @@ def test_term_index_build_search_and_prune(spark, tmp_path):
     # file-skip: the pruned read opens only the query terms' buckets
     # (input_file_name read on the pre-distinct scan — the distinct's
     # exchange erases it)
-    pruned = TI._pruned_scan(spark, idx, ["spark", "prunes"])
+    log, snap = TI._pin(spark, idx)
+    pruned = TI._pruned_scan(log, snap, ["spark", "prunes"])
     opened = {
         r.f
         for r in pruned.select(F.input_file_name().alias("f")).distinct().collect()
     }
-    norm, tbs, _ = TI._query_buckets(spark, idx, ["spark", "prunes"], None)
+    norm, tbs = TI._query_buckets(log, snap, ["spark", "prunes"], None)
     assert opened, "pruned read returned no files"
     for f in opened:
         assert any(f"tb={b}/" in f for b in tbs), (f, tbs)
     all_dirs = {
         r.f.split("/tb=")[1].split("/")[0]
-        for r in spark.read.parquet(idx)
+        for r in log.read(snap)
         .select(F.input_file_name().alias("f"))
         .distinct()
         .collect()
@@ -711,42 +712,52 @@ def test_term_index_build_search_and_prune(spark, tmp_path):
         TI.read_postings_pruned(spark, idx, ["spark!"])
 
 
-def test_term_index_pin_written_once(spark, tmp_path, fs_spy):
-    """Queries read the ``_term_buckets`` scheme pin on every call, so
-    builds never rewrite it in place: the first build and an overwrite
-    (which deletes the directory) write it atomically, a same-scheme
-    append leaves it alone."""
-    from platypus_ingestion_plugins_spark import fs
+def test_term_index_rebuild_changes_scheme(spark, tmp_path, fs_spy):
+    """``mode="overwrite"`` is a rebuild under the requested scheme: a
+    flat 4-bucket index rebuilt with 8 buckets and positions answers
+    term, BM25, phrase and suggest queries exactly like a fresh build
+    at the new scheme. An append keeps the scheme and raises on
+    another; no build writes a scheme file beside the snapshot."""
     from platypus_ingestion_plugins_spark.serving import text_index as TI
 
     docs = spark.createDataFrame(
-        [(1, "spark shuffles data"), (2, "lucene builds indexes")],
+        [(1, "spark shuffles data"), (2, "lucene builds indexes"), (3, "spark builds data")],
         "doc_id long, text string",
     )
-    idx = str(tmp_path / "tidx")
-    marker = f"{idx}/_term_buckets"
+    more = spark.createDataFrame([(4, "spark again")], "doc_id long, text string")
+    idx, fresh = str(tmp_path / "tidx"), str(tmp_path / "fresh")
 
-    def pin_writes(calls):
-        return [(name, args[0]) for name, args in calls if args and "_term_buckets" in str(args[0])]
+    def answers(path):
+        return (
+            sorted(r.doc_id for r in TI.search_terms_indexed(spark, path, ["spark"]).collect()),
+            sorted((r.doc_id, r.bm25) for r in TI.bm25_indexed(spark, path, "spark data").collect()),
+            sorted(r.doc_id for r in TI.search_phrase_indexed(spark, path, "builds data").collect()),
+            {(r.term, r.doc_freq) for r in TI.suggest_terms(spark, path, "sparc").collect()},
+            [tuple(r) for r in TI.term_index_stats(spark, path).collect()],
+        )
 
     calls = fs_spy()
     TI.build_term_index(docs, "text", "doc_id", idx, buckets=4)
-    first = pin_writes(calls)
-    assert ("write_text_atomic", marker) in first and ("write_text", marker) not in first, first
-
-    calls.clear()
-    more = spark.createDataFrame([(3, "spark again")], "doc_id long, text string")
     TI.build_term_index(more, "text", "doc_id", idx, buckets=4, mode="append")
-    assert pin_writes(calls) == [], calls
-    assert fs.read_text(spark, marker) == "4"
     got = sorted(r.doc_id for r in TI.search_terms_indexed(spark, idx, ["spark"]).collect())
-    assert got == [1, 3], got
+    assert got == [1, 3, 4], got
+    with pytest.raises(ValueError):
+        TI.build_term_index(more, "text", "doc_id", idx, buckets=8, mode="append")
 
-    calls.clear()
-    TI.build_term_index(more, "text", "doc_id", idx, buckets=4, mode="overwrite")
-    assert ("write_text_atomic", marker) in pin_writes(calls), calls
+    TI.build_term_index(docs, "text", "doc_id", idx, buckets=8, positions=True, mode="overwrite")
+    TI.build_term_index(docs, "text", "doc_id", fresh, buckets=8, positions=True)
+    want = answers(fresh)
+    assert want[0] == [1, 3] and want[2] == [3] and want[4][0][:2] == (8, True), want
+    assert answers(idx) == want
+    written = {args[0] for name, args in calls if name.startswith("write_text")}
+    assert all("/_snapshots/" in p for p in written), written
+
+    TI.build_term_index(more, "text", "doc_id", idx, buckets=8, positions=True, mode="append")
     got = sorted(r.doc_id for r in TI.search_terms_indexed(spark, idx, ["spark"]).collect())
-    assert got == [3], got
+    assert got == [1, 3, 4], got
+    TI.build_term_index(more, "text", "doc_id", idx, buckets=8, positions=True, mode="overwrite")
+    got = sorted(r.doc_id for r in TI.search_terms_indexed(spark, idx, ["spark"]).collect())
+    assert got == [4], got
 
 
 def test_wildcard_scan_and_indexed_agree(spark, tmp_path):
@@ -1118,8 +1129,6 @@ def test_term_index_delete_and_compact(spark, tmp_path):
     immediately (search, postings, suggest doc_freq); compaction
     applies them physically (same answers, _deletes gone, distinct
     posting fold) and is replay-safe; double-delete is idempotent."""
-    import os
-
     from platypus_ingestion_plugins_spark.serving import text_index as TI
 
     docs = spark.createDataFrame(
@@ -1157,13 +1166,14 @@ def test_term_index_delete_and_compact(spark, tmp_path):
 
     TI.compact_term_index(spark, idx)
     assert hits() == [1, 3]  # physical apply changed no answer
-    assert not os.path.exists(f"{idx}/_deletes")
+    assert TI.term_index_stats(spark, idx).first().n_deleted == 0
     # the compacted index is a distinct posting fold: the duplicate
     # doc-1 append collapsed
-    postings = spark.read.parquet(idx)
+    log, snap = TI._pin(spark, idx)
+    postings = log.read(snap)
     assert postings.count() == postings.distinct().count()
     assert postings.filter("doc_id = 2").count() == 0
-    # sidecar survived the swap; pruned reads still work
+    # the scheme survived the compaction; pruned reads still work
     assert sorted(
         r.doc_id
         for r in TI.search_terms_indexed(spark, idx, ["spark"], buckets=8).collect()
@@ -1230,14 +1240,15 @@ def test_search_phrase_indexed_matches_scan_path(spark, tmp_path):
 
 
 def test_term_index_delete_validation_and_crash_heal(
-    spark, tmp_path, crash_on_old_delete
+    spark, tmp_path, crash_at_publish, crash_on_old_delete
 ):
-    """r13 self-review pins: delete_docs rejects multi-column frames;
-    a wrongly-named delete table fails loudly at read (not a cryptic
-    join error). Compactions that die while deleting old files leave
+    """r13 self-review pins: delete_docs rejects multi-column frames
+    and a wrongly-named id frame before it commits (not a cryptic join
+    error at read). Compactions that die before their snapshot
+    publishes, or while deleting files no snapshot references, leave
     every reader answering as before (tombstones still active), and
-    the re-run converges to one file per bucket. A ``{path}.old``
-    left by the older rename-based compactor is refused, files kept."""
+    the re-run converges to one file per bucket. A ``{path}.old`` left
+    by the older rename-based compactor is refused, files kept."""
     import os
     import shutil
 
@@ -1254,10 +1265,8 @@ def test_term_index_delete_validation_and_crash_heal(
         TI.delete_docs(
             spark, idx, spark.createDataFrame([(1, 2)], "a long, b long")
         )
-    TI.delete_docs(spark, idx, spark.createDataFrame([(9,)], "wrong_name long"))
     with pytest.raises(ValueError, match="wrongly-named"):
-        TI.search_terms_indexed(spark, idx, ["beta"]).collect()
-    shutil.rmtree(f"{idx}/_deletes")
+        TI.delete_docs(spark, idx, spark.createDataFrame([(9,)], "wrong_name long"))
 
     # fragment the buckets (a replayed batch), then tombstone doc 2
     TI.build_term_index(
@@ -1274,32 +1283,35 @@ def test_term_index_delete_validation_and_crash_heal(
             {(r.term, r.doc_freq) for r in TI.suggest_terms(spark, idx, "beta", max_dist=1).collect()},
         )
 
+    def live_files():
+        return TI._pin(spark, idx)[1]["files"]
+
     def bucket_files():
-        return {
-            d: [f for f in os.listdir(f"{idx}/{d}") if f.endswith(".parquet")]
-            for d in os.listdir(idx) if d.startswith("tb=")
-        }
+        return {d: f for d, f in live_files().items() if d.startswith("tb=")}
 
     want = answers()
     assert want[0] == [1, 3] and want[2] == [3]
-    n_files = sum(len(f) for f in bucket_files().values())
+    before = live_files()
+    with crash_at_publish():
+        TI.compact_term_index(spark, idx)
+    assert live_files() == before
+    assert answers() == want
+    # the re-runs find the crashed run's files on disk and die deleting
+    # them, then one delete later: the old snapshot stays in force
     with crash_on_old_delete(idx):
         TI.compact_term_index(spark, idx)
-    assert sum(len(f) for f in bucket_files().values()) > n_files
     assert answers() == want
-    # the next run dies one delete later: _deletes goes last, so the
-    # tombstones still hide doc 2 from the old postings left behind
     with crash_on_old_delete(idx, skip=1):
         TI.compact_term_index(spark, idx)
     assert answers() == want
-    assert os.path.exists(f"{idx}/_deletes")
+    assert live_files() == before and before.get("_deletes")
     TI.compact_term_index(spark, idx)
-    assert not os.path.exists(f"{idx}/_deletes")
+    assert TI.term_index_stats(spark, idx).first().n_deleted == 0
     assert all(len(f) == 1 for f in bucket_files().values())
     assert answers() == want
     # no tombstones left: suggest now reads the persisted _termdict,
-    # which a crashed rewrite leaves valid
-    assert os.path.exists(f"{idx}/_termdict/_SUCCESS")
+    # which a crashed rewrite leaves in force
+    assert live_files().get("_termdict") and not live_files().get("_deletes")
     with crash_on_old_delete(idx):
         TI.compact_term_index(spark, idx)
     assert answers() == want
@@ -1307,10 +1319,13 @@ def test_term_index_delete_validation_and_crash_heal(
     assert all(len(f) == 1 for f in bucket_files().values())
     assert answers() == want
 
-    shutil.copytree(idx, f"{idx}.old")
+    # the older compactor parked the index at {path}.old and died
+    # before its staged copy took the path
+    shutil.move(idx, f"{idx}.old")
     with pytest.raises(IOError, match=r"vidx\.old"):
         TI.compact_term_index(spark, idx)
-    assert os.path.exists(f"{idx}.old/_term_buckets")
+    assert os.path.exists(f"{idx}.old/_snapshots")
+    shutil.move(f"{idx}.old", idx)
     assert answers() == want
 
 
@@ -1492,11 +1507,10 @@ def test_bm25_indexed_matches_scan_path(spark, tmp_path):
 def test_suggest_terms_termdict_lifecycle(spark, tmp_path):
     """The compaction-persisted term dictionary: suggest answers from
     _termdict after compaction (and they equal the derived answers);
-    a post-compaction APPEND invalidates it (file gone, fresh terms
-    visible); post-compaction TOMBSTONES force the derivation
-    fallback (deleted docs leave doc_freq immediately)."""
-    import os
-
+    a post-compaction APPEND invalidates it (its snapshot no longer
+    lists the dictionary, fresh terms visible); post-compaction
+    TOMBSTONES force the derivation fallback (deleted docs leave
+    doc_freq immediately)."""
     from platypus_ingestion_plugins_spark.serving import text_index as TI
 
     docs = spark.createDataFrame(
@@ -1512,10 +1526,13 @@ def test_suggest_terms_termdict_lifecycle(spark, tmp_path):
             for r in TI.suggest_terms(spark, idx, "alpha", max_dist=1).collect()
         }
 
+    def termdict():
+        return TI._pin(spark, idx)[1]["files"].get("_termdict")
+
     before = sugg()  # derived (no dict yet)
-    assert not os.path.exists(f"{idx}/_termdict")
+    assert not termdict()
     TI.compact_term_index(spark, idx)
-    assert os.path.exists(f"{idx}/_termdict")
+    assert termdict()
     assert sugg() == before == {("alpha", 2, 0)}
 
     # append invalidates: the stale dict must not hide 'alphq'
@@ -1523,13 +1540,14 @@ def test_suggest_terms_termdict_lifecycle(spark, tmp_path):
         spark.createDataFrame([(4, "alphq")], "doc_id long, text string"),
         "text", "doc_id", idx, buckets=4, mode="append",
     )
-    assert not os.path.exists(f"{idx}/_termdict")
+    assert not termdict()
     assert sugg() == {("alpha", 2, 0), ("alphq", 1, 1)}
 
     # tombstones force the fallback even with a dict present
     TI.compact_term_index(spark, idx)
-    assert os.path.exists(f"{idx}/_termdict")
+    assert termdict()
     TI.delete_docs(spark, idx, spark.createDataFrame([(1,)], "doc_id long"))
+    assert termdict()
     assert sugg() == {("alpha", 1, 0), ("alphq", 1, 1)}
 
 

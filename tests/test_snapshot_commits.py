@@ -1,6 +1,7 @@
-"""Snapshot commits for streaming sketch state and the line-count index:
-a reader racing a writer sees the old state or the new one, reads never
-write, and nothing outside ``fs`` and ``snapshots`` renames."""
+"""Snapshot commits for streaming sketch state, the line-count index and
+the term index: a reader racing a writer sees the old state or the new
+one, reads never write, and nothing outside ``fs`` and ``snapshots``
+renames."""
 
 import ast
 import datetime as dt
@@ -17,6 +18,7 @@ from platypus_ingestion_plugins_spark.functions.sketches import (
     sketch_read,
 )
 from platypus_ingestion_plugins_spark.operators import dedup
+from platypus_ingestion_plugins_spark.serving import text_index as TI
 
 
 def _race(reader):
@@ -171,4 +173,111 @@ def test_only_fs_and_snapshots_rename():
                 name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
                 if name in ("rename", "_rename_or_raise"):
                     found.append(f"{src.relative_to(pkg)}:{node.lineno}")
+    assert found == []
+
+
+def _term_answers(spark, idx):
+    """Term, BM25, phrase and suggest answers over a positional index."""
+    return (
+        sorted(r.doc_id for r in TI.search_terms_indexed(spark, idx, ["beta"]).collect()),
+        sorted((r.doc_id, r.bm25) for r in TI.bm25_indexed(spark, idx, "alpha beta").collect()),
+        sorted(r.doc_id for r in TI.search_phrase_indexed(spark, idx, "beta alpha").collect()),
+        sorted((r.term, r.doc_freq) for r in TI.suggest_terms(spark, idx, "beta").collect()),
+    )
+
+
+def test_term_index_rebuild_and_compaction_race_readers(spark, tmp_path, fs_spy):
+    """Term, BM25, phrase and suggest answers after every mutating fs
+    call of a rebuild under a new scheme, then of a compaction, are
+    those from before the operation or after it: never an error or a
+    mix of the two."""
+    docs = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "beta gamma"), (3, "beta alpha delta"), (4, "beta alpha")],
+        "doc_id long, text string",
+    )
+    idx = str(tmp_path / "tidx")
+    TI.build_term_index(docs.filter("doc_id < 4"), "text", "doc_id", idx, buckets=4, positions=True)
+    TI.delete_docs(spark, idx, spark.createDataFrame([(2,)], "doc_id long"))
+    before = _term_answers(spark, idx)
+
+    hook, answers, errors = _race(lambda: _term_answers(spark, idx))
+    calls = fs_spy(hook)
+    TI.build_term_index(docs, "text", "doc_id", idx, buckets=8, positions=True)
+    after = _term_answers(spark, idx)
+    assert errors == []
+    assert before != after and after[0] == [1, 2, 3, 4]
+    assert len(answers) == len(calls) >= 3
+    assert all(a in (before, after) for a in answers)
+    assert answers[-1] == after
+
+    # a replayed append and a tombstone, then the compaction folds both
+    TI.build_term_index(docs.filter("doc_id = 4"), "text", "doc_id", idx, buckets=8,
+                        positions=True, mode="append")
+    TI.delete_docs(spark, idx, spark.createDataFrame([(3,)], "doc_id long"))
+    before = _term_answers(spark, idx)
+    answers.clear()
+    calls.clear()
+    TI.compact_term_index(spark, idx)
+    assert errors == []
+    assert len(answers) == len(calls) >= 3
+    assert all(a == before for a in answers)
+    assert TI.term_index_stats(spark, idx).first().n_deleted == 0
+
+
+def test_term_index_reads_never_write(spark, tmp_path, fs_spy):
+    """Every term-index reader makes no mutating fs call, whether the
+    dictionary is the persisted one or derived under tombstones."""
+    docs = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "beta gamma"), (3, "beta alpha delta")],
+        "doc_id long, text string",
+    )
+    idx = str(tmp_path / "tidx")
+    TI.build_term_index(docs, "text", "doc_id", idx, buckets=4, positions=True)
+    TI.compact_term_index(spark, idx)
+
+    def read_all():
+        TI.read_postings_pruned(spark, idx, ["beta"]).collect()
+        TI.search_terms_indexed(spark, idx, ["alpha", "beta"], require_all=True).collect()
+        TI.search_phrase_indexed(spark, idx, "beta alpha", slop=1).collect()
+        TI.search_span_near(spark, idx, ["alpha", "delta"], slop=1, in_order=False).collect()
+        TI.bm25_indexed(spark, idx, "alpha beta").collect()
+        TI.search_wildcard_indexed(spark, idx, "al*").collect()
+        TI.search_regexp_indexed(spark, idx, "g.*").collect()
+        TI.search_prefix_indexed(spark, idx, "del").collect()
+        TI.term_index_stats(spark, idx).collect()
+        TI.search_bool_indexed(spark, idx, must=["beta"], must_not=["gamma"]).collect()
+        TI.more_like_this_indexed(spark, idx, "alpha beta").collect()
+        TI.suggest_terms(spark, idx, "betta").collect()
+        TI.did_you_mean(spark, idx, "alpah betta").collect()
+
+    calls = fs_spy()
+    read_all()
+    assert calls == []
+    TI.delete_docs(spark, idx, spark.createDataFrame([(2,)], "doc_id long"))
+    assert calls  # the spy sees the index's writes
+    calls.clear()
+    read_all()
+    assert calls == []
+
+
+def test_text_index_commits_only_by_snapshot():
+    """``serving/text_index.py`` writes only through its snapshot log
+    and reads only the files a snapshot names: it calls none of
+    ``write_text``, ``write_text_atomic``, ``rewrite_dirs``,
+    ``list_names`` or ``delete``, and no ``.read.parquet``."""
+    src = pathlib.Path(TI.__file__)
+    banned = ("write_text", "write_text_atomic", "rewrite_dirs", "list_names", "delete")
+    found = []
+    for node in ast.walk(ast.parse(src.read_text(), str(src))):
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            reads_path = (
+                name == "parquet"
+                and isinstance(f, ast.Attribute)
+                and isinstance(f.value, ast.Attribute)
+                and f.value.attr == "read"
+            )
+            if name in banned or reads_path:
+                found.append(f"{src.name}:{node.lineno}")
     assert found == []
