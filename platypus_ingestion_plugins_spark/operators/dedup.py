@@ -10,6 +10,18 @@ Scale design (the whole point at 100 TB):
   murmur3.
 
 All operators are pure DataFrame compositions — no UDFs, no collect.
+
+Staging rule: a frame that a plan reads more than once (a self-join's
+two sides, signatures plus verification) is staged where it is built,
+with one eager ``localCheckpoint``. AQE's runtime broadcast conversion
+defeats exchange reuse, so an unstaged frame re-runs its map stage
+once per reference. Building such an operator's DataFrame therefore
+runs the staging job; nothing is left to run inside a later action.
+The blocks are spillable and freed once the caller drops the frame
+and the context cleaner runs. The trade: staged blocks have no
+lineage, so losing an executor fails the job instead of recomputing.
+On a fault-prone cluster, reliable-checkpoint the input first
+(``spark.sparkContext.setCheckpointDir`` + ``.checkpoint()``).
 """
 
 from __future__ import annotations
@@ -330,7 +342,6 @@ def line_count_index_exists(spark, path: str) -> bool:
 def append_line_count_index(
     counts: DataFrame, path: str, key_buckets: int = 64,
     batch_id: int | str | None = None,
-    auto_compact_max_files: int | None = None,
 ) -> None:
     """Append per-batch line counts to a parquet index PARTITIONED by
     kb = hash(line_key) % key_buckets — the band-key-index layout
@@ -348,20 +359,8 @@ def append_line_count_index(
     it, and readers collapse duplicate (line_key, batch_id) appends
     before summing, making replays exact. Compaction folds epochs
     away, so run it only after a trigger's checkpoint has committed
-    (no earlier epoch can replay).
-
-    ``auto_compact_max_files`` (VERDICT r9 task #5): when any kb=
-    directory of the newest snapshot holds more files than the
-    threshold, the index is re-aggregated via
-    ``compact_line_count_index`` BEFORE this batch's rows land — at
-    that point every epoch except the one being appended has committed
-    and can never replay. The in-flight epoch CAN replay (foreachBatch
-    is at-least-once), so its rows — present only if this very call is
-    a replay of an attempt that crashed after its commit — are carried
-    through the rewrite still epoch-tagged (``exclude_batch_id``):
-    folding them into the untagged aggregate would make the re-append
-    double-count. The fragmentation check reads the snapshot; it lists
-    no directory."""
+    (no earlier epoch can replay), or pass the in-flight epoch as
+    ``exclude_batch_id``."""
     log = _line_index(counts.sparkSession, path)
     snap = log.latest()
     if snap is not None and snap["key_buckets"] != key_buckets:
@@ -369,11 +368,6 @@ def append_line_count_index(
             f"index at {path} was written with key_buckets={snap['key_buckets']}, "
             f"append requested {key_buckets}"
         )
-    if auto_compact_max_files is not None:
-        snap = _compact_line_counts(
-            log, snap, auto_compact_max_files,
-            None if batch_id is None else str(batch_id),
-        ) or snap
     out = counts.withColumn(
         "batch_id",
         F.lit("__unbatched" if batch_id is None else str(batch_id)),
@@ -397,21 +391,14 @@ def compact_line_count_index(
 
     ``exclude_batch_id``: rows tagged with that epoch pass through the
     rewrite UN-folded (still tagged). Required when compacting while
-    that epoch is in flight (the auto-compact path in
-    ``append_line_count_index``): folding a not-yet-committed epoch
-    into the untagged aggregate would defeat the reader's
-    (line_key, batch_id) replay collapse and double-count on
-    replay."""
+    that epoch is in flight (a foreachBatch handler compacting before
+    its own append): folding a not-yet-committed epoch into the
+    untagged aggregate would defeat the reader's (line_key, batch_id)
+    replay collapse and double-count on replay."""
     log = _line_index(spark, path)
     snap = log.latest()
-    return _compact_line_counts(log, snap, max_files_per_bucket, exclude_batch_id) is not None
-
-
-def _compact_line_counts(log, snap, max_files_per_bucket, exclude_batch_id):
-    """``compact_line_count_index`` on ``snap``: the new snapshot, or
-    None when no kb= directory is fragmented."""
     if snap is None or all(len(f) <= max_files_per_bucket for f in snap["files"].values()):
-        return None
+        return False
     src = log.read(snap)
     in_flight = None
     if exclude_batch_id is not None:
@@ -431,7 +418,8 @@ def _compact_line_counts(log, snap, max_files_per_bucket, exclude_batch_id):
     if in_flight is not None:
         folded = folded.unionByName(in_flight.select("kb", "line_key", "n", "batch_id"))
     meta = {"key_buckets": snap["key_buckets"]}
-    return log.commit(snap, folded.repartition("kb"), meta, ("kb",))
+    log.commit(snap, folded.repartition("kb"), meta, ("kb",))
+    return True
 
 
 def read_line_counts_pruned(
@@ -546,24 +534,9 @@ def cap_shingle_df(sh: DataFrame, max_df: int | None, key_col: str = "shingle") 
     return sh.join(F.broadcast(hot), key_col, "left_anti")
 
 
-def _maybe_single_eval(df: DataFrame, enabled: bool) -> DataFrame:
-    """Lazy localCheckpoint when ``enabled`` — the single-evaluation
-    pattern for frames referenced by several subplans (AQE's runtime
-    broadcast conversion defeats exchange reuse, so without it the
-    expensive map stage runs once per reference). TRADE-OFF
-    (ADVICE r9): checkpointed blocks have NO lineage — losing an
-    executor mid-job fails the job instead of recomputing, and the
-    frame occupies (spillable) executor storage until released. On a
-    fault-prone or memory-tight cluster pass ``single_eval=False`` to
-    choose recomputation, or reliable-checkpoint the input yourself
-    (``spark.sparkContext.setCheckpointDir`` + ``.checkpoint()``)
-    before calling."""
-    return df.localCheckpoint(eager=False) if enabled else df
-
-
 def ngram_jaccard_pairs(
     df: DataFrame, text_col: str, id_col: str, n: int = 3, threshold: float = 0.5,
-    max_shingle_df: int | None = None, single_eval: bool = True,
+    max_shingle_df: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by true n-gram Jaccard similarity.
 
@@ -583,14 +556,10 @@ def ngram_jaccard_pairs(
     denominator is defined over; there it is one id-partition window
     over the already-capped rows.
 
-    The uncapped sized-shingle frame is lazily localCheckpointed
-    (winnow's single-evaluation pattern): the self-join references it
-    twice and AQE's runtime broadcast conversion defeats exchange
-    reuse, so without it the tokenize+gram map stage runs once per
-    side. Blocks are spillable and freed when the caller releases the
-    frame (test_dedup_family_leaves_no_leaked_storage pins the bounded
-    lifetime); at corpus scale prefer the ``max_shingle_df`` path,
-    which bounds the join and skips the materialization.
+    The uncapped sized-shingle frame is staged (module docstring): the
+    self-join reads it twice. At corpus scale prefer the
+    ``max_shingle_df`` path, which bounds the join and skips the
+    staging.
     """
     if max_shingle_df is None:
         df = ensure_parallelism(df)
@@ -598,15 +567,8 @@ def ngram_jaccard_pairs(
             df.select(F.col(id_col), _gram_array(text_col, n).alias("__sh_arr"))
             .withColumn("n_sh", F.size("__sh_arr"))
             .select(F.col(id_col), F.explode("__sh_arr").alias("shingle"), "n_sh")
+            .localCheckpoint(eager=True)
         )
-        # single-evaluation fix (see _maybe_single_eval for the
-        # fault-tolerance trade): the self-join references the frame
-        # twice and AQE's runtime broadcast conversion defeats
-        # exchange reuse, so without this the tokenize+gram map
-        # stage — the CPU-heavy part — runs once PER SIDE. At corpus
-        # scale prefer the max_shingle_df path, whose hot-key cap
-        # bounds the join anyway and skips this materialization.
-        sized = _maybe_single_eval(sized, single_eval)
     else:
         from pyspark.sql import Window
 
@@ -942,21 +904,12 @@ def winnow_overlap_pairs(
     corpus-wide template fps get dropped by a broadcast anti-join
     before the self-join. Output: (id_a, id_b, n_shared), id_a < id_b.
     """
-    # localCheckpoint BEFORE the self-join (and before the hot-key
-    # cap, which itself references the frame twice): the fingerprint
-    # UDF runs exactly ONCE, and every downstream reference reads the
-    # materialized (id, fp) blocks — two longs per row, spillable
-    # (MEMORY_AND_DISK), ~1/w the density of the corpus grams, so the
-    # footprint stays modest even at corpus scale. Measured at sf0.1
-    # (5k docs, 306k fps, min-of-2 in one session): checkpointed
-    # overlap 1.62 s vs per-side recompute 2.32 s — the r7 claim that
-    # recompute beat the cut was wrong once the UDF's real cost was
-    # isolated, and was the main cause of the r7 winnow_overlap bench
-    # regression (1.94 s -> 3.78 s). At 100 TB a repeated-overlap
-    # workload still materializes the fingerprint index to parquet
-    # once instead of re-fingerprinting per run.
+    # staged before the self-join and the hot-key cap, which each read
+    # it twice: the fingerprint UDF runs once. Two longs per row, ~1/w
+    # the density of the corpus grams. Measured at sf0.1 (5k docs,
+    # 306k fps): staged overlap 1.62 s vs per-side recompute 2.32 s.
     fps = cap_shingle_df(
-        winnow_fingerprints(df, text_col, id_col, k, w).localCheckpoint(eager=False),
+        winnow_fingerprints(df, text_col, id_col, k, w).localCheckpoint(eager=True),
         max_fp_df,
         key_col="fp",
     )
@@ -1057,7 +1010,6 @@ def minhash_lsh_dedup_pairs(
     bands: int = 4,
     threshold: float = 0.5,
     max_shingle_df: int | None = None,
-    single_eval: bool = True,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: signatures -> band buckets ->
     candidate pairs -> verify with true Jaccard >= threshold.
@@ -1076,18 +1028,11 @@ def minhash_lsh_dedup_pairs(
     cap_shingle_df), applied before signatures so the LSH and
     verification stages see the same shingle sets.
 
-    The shingle frame is lazily localCheckpointed (the winnow /
-    ngram_jaccard_pairs single-evaluation pattern): signatures, sizes,
-    and both verification sides reference it — four evaluations of the
-    tokenize+gram map stage without the checkpoint, one with it.
-    Blocks are spillable and freed when the caller releases the frame
-    (bounded lifetime, leak-tested); ``single_eval=False`` chooses
-    recomputation instead (see _maybe_single_eval for the
-    executor-loss trade)."""
-    sh = _maybe_single_eval(
-        cap_shingle_df(shingles(df, text_col, id_col, n), max_shingle_df),
-        single_eval,
-    )
+    The shingle frame is staged (module docstring): signatures, sizes
+    and both verification sides read it."""
+    sh = cap_shingle_df(
+        shingles(df, text_col, id_col, n), max_shingle_df
+    ).localCheckpoint(eager=True)
     sig = minhash_from_shingles(sh, id_col, num_hashes)
     cands = lsh_candidate_pairs(sig, id_col, bands)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))

@@ -39,7 +39,6 @@ def clean_corpus(
     shingle_n: int = 3,
     decontam_n: int = 13,
     max_shingle_df: int | None = None,
-    single_eval: bool = True,
 ) -> DataFrame:
     """The hygiene chain: returns the cleaned corpus (original columns,
     ``text_col`` NFC-normalized) plus a ``kept_reason``-free contract —
@@ -47,20 +46,11 @@ def clean_corpus(
     survivor), near-dup dedup (min-id survivor per LSH group), the
     quality floor, and (when ``benchmark`` is given) decontamination.
 
-    ``single_eval`` (default on) materializes the normalized and
-    exact-deduped frames with eager localCheckpoints so the Arrow
-    unicodedata UDF — the chain's priciest map stage — runs once per
-    frame instead of once per downstream reference. Constructing the
-    returned DataFrame therefore executes the two staging jobs and
-    pins the normalized/deduped frames in (spillable) executor
-    storage before the caller triggers any action; a lazy boundary
-    would let the chain's fused first action race the block store and
-    recompute the UDF anyway. The trade (ADVICE r9): checkpointed
-    blocks have no lineage, so an executor lost mid-job fails the job
-    instead of recomputing. On a fault-prone or storage-tight cluster
-    pass ``single_eval=False`` to restore a purely lazy, by-need
-    build (the flag also propagates to the LSH stage's shingle
-    frame), or reliable-checkpoint ``docs`` yourself before calling.
+    Constructing the returned DataFrame runs the staging jobs of the
+    normalized and exact-deduped frames (and of the LSH stage's
+    shingle frame): each is read by several subplans, so it is staged
+    where it is built (see ``operators.dedup`` for the rule and its
+    executor-loss trade).
     """
     from platypus_ingestion_plugins_spark.functions.text import (
         normalize_unicode,
@@ -68,15 +58,12 @@ def clean_corpus(
     )
     from platypus_ingestion_plugins_spark.operators import decontam, dedup
 
-    # single-evaluation checkpoint (the jaccard-family pattern): the
-    # normalized frame is referenced by the exact-dedup aggregate,
-    # its semi-join back, and the whole near-dup subchain — without
-    # the checkpoint the Arrow unicodedata UDF (the chain's priciest
-    # map stage) re-runs once per reference
-    def _stage(df):
-        return df.localCheckpoint(eager=True) if single_eval else df
-
-    normed = _stage(docs.withColumn(text_col, normalize_unicode(text_col)))
+    # staged: the exact-dedup aggregate, its semi-join back and the
+    # whole near-dup subchain all read it, and the Arrow unicodedata
+    # UDF is the chain's priciest map stage
+    normed = docs.withColumn(
+        text_col, normalize_unicode(text_col)
+    ).localCheckpoint(eager=True)
 
     # exact: keep each content group's min-id row
     survivors = (
@@ -84,9 +71,9 @@ def clean_corpus(
         .agg(F.min(id_col).alias(id_col))
         .drop("__sha")
     )
-    # same single-eval rationale: the exact-deduped frame feeds the
-    # LSH pair generation, the CC node set, and the survivor semi-join
-    deduped = _stage(normed.join(survivors, id_col, "left_semi"))
+    # staged: it feeds the LSH pair generation, the CC node set and the
+    # survivor semi-join
+    deduped = normed.join(survivors, id_col, "left_semi").localCheckpoint(eager=True)
 
     # near-dup: LSH pairs -> components -> keep group minimum
     # at corpus scale SET max_shingle_df: one boilerplate phrase shared
@@ -95,7 +82,6 @@ def clean_corpus(
     pairs = dedup.minhash_lsh_dedup_pairs(
         deduped, text_col, id_col, n=shingle_n,
         threshold=near_dup_threshold, max_shingle_df=max_shingle_df,
-        single_eval=single_eval,
     )
     groups = dedup.connected_components_star(
         pairs, nodes=deduped.select(id_col), id_col=id_col

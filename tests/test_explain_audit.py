@@ -54,8 +54,10 @@ HEADLINE = [
     "bloom_decontam",
     "quantile_sketch",
     "line_dedup",
-    # constructing pipeline_clean_corpus runs its two eager staging
-    # jobs; the audited plan is everything downstream of them
+    # constructing the dedup-family entries (dedup_minhash_lsh,
+    # winnow_overlap, pipeline_clean_corpus, dedup_survivors) runs the
+    # eager staging jobs of their re-read frames; the audited plan is
+    # everything downstream of them
     "pipeline_clean_corpus",
     "dedup_survivors",
     "top_terms_per_group",
@@ -298,9 +300,9 @@ def test_scans_prune_columns(plans):
     narrow schema (≤4 columns) — the tables have 3-4 columns of
     payload but a scan reading the full documents/embeddings width
     for a 2-column pipeline would be a pruning regression."""
-    # (dedup_minhash_lsh's scan is hidden behind its lazy
-    # localCheckpoint in the static plan; jaccard_join reads the same
-    # documents shingle path un-checkpointed, keeping the probe live)
+    # (dedup_minhash_lsh's scan sits behind its staged shingle frame,
+    # outside the static plan; jaccard_join reads the same documents
+    # shingle path unstaged, keeping the probe live)
     for name in ("similarity_topk", "embedding_neardup", "jaccard_join"):
         widths = [
             len(w.split(","))

@@ -103,6 +103,39 @@ def test_no_module_reads_plan_statistics():
     assert found == []
 
 
+def test_dedup_family_stages_eagerly_without_option():
+    """One staging rule for the dedup family: a frame read more than
+    once is staged where it is built, with an eager localCheckpoint.
+    No package name carries a ``single_eval`` option, and
+    ``operators/dedup.py`` and ``pipelines.py`` pass ``eager`` only as
+    the literal ``True``: a lazy checkpoint leaves its staging job to
+    run inside a later action."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(dedup.__file__).resolve().parent.parent
+    staged = {"operators/dedup.py", "pipelines.py"}
+    found = []
+    for src in sorted(pkg.rglob("*.py")):
+        rel = str(src.relative_to(pkg))
+        for node in ast.walk(ast.parse(src.read_text(), str(src))):
+            name = next(
+                (getattr(node, a) for a in ("id", "attr", "arg", "name")
+                 if isinstance(getattr(node, a, None), str)),
+                "",
+            )
+            if "single_eval" in name:
+                found.append(f"{rel}:{node.lineno}: {name}")
+            if (
+                rel in staged
+                and isinstance(node, ast.keyword)
+                and node.arg == "eager"
+                and not (isinstance(node.value, ast.Constant) and node.value.value is True)
+            ):
+                found.append(f"{rel}:{node.lineno}: eager={ast.unparse(node.value)}")
+    assert found == []
+
+
 def test_dedup_family_leaves_no_leaked_storage(spark, docs):
     """In a long-lived session (a streaming driver, a notebook), an
     operator that pins storage without a bounded lifetime accumulates
@@ -2696,12 +2729,12 @@ def test_ivf_auto_compaction_plateau(spark, tmp_path):
 
 
 def test_line_count_auto_compaction_exact_under_replay(spark, tmp_path):
-    """Line-count auto-compaction must stay EXACT under at-least-once
-    replay: auto_compact_max_files=0 forces a fold before every
-    append, a replayed epoch (same batch_id appended twice, fold in
-    between) is carried through the rewrite still tagged
-    (exclude_batch_id) so the reader's (line_key, batch_id) collapse
-    counts it once. 12 epochs + 1 replay -> totals of exactly 12."""
+    """Line-count compaction must stay EXACT under at-least-once
+    replay: a fold before every append (``max_files_per_bucket=0``,
+    the in-flight epoch excluded) carries a replayed epoch (same
+    batch_id appended twice, fold in between) through the rewrite
+    still tagged, so the reader's (line_key, batch_id) collapse counts
+    it once. 12 epochs + 1 replay -> totals of exactly 12."""
     import hashlib
 
     idx = str(tmp_path / "lines")
@@ -2709,17 +2742,19 @@ def test_line_count_auto_compaction_exact_under_replay(spark, tmp_path):
         [Row(doc_id=b * 10 + i, text=f"unique {b * 10 + i}\nShared footer")
          for i in range(3)]
     )
+
+    def append(counts, b):
+        dedup.compact_line_count_index(
+            spark, idx, max_files_per_bucket=0, exclude_batch_id=str(b),
+        )
+        dedup.append_line_count_index(counts, idx, key_buckets=4, batch_id=b)
+
     peak = 0
     for b in range(12):
         counts = dedup.line_count_keys(mk(b), "text", "doc_id")
-        dedup.append_line_count_index(
-            counts, idx, key_buckets=4, batch_id=b, auto_compact_max_files=0,
-        )
+        append(counts, b)
         if b == 5:  # crashed-then-replayed epoch: same batch_id again
-            dedup.append_line_count_index(
-                counts, idx, key_buckets=4, batch_id=b,
-                auto_compact_max_files=0,
-            )
+            append(counts, b)
         peak = max(peak, max(_leaf_file_counts(spark, idx).values()))
     # fold-every-append keeps each kb dir near one file; the replayed
     # epoch rides tagged beside the fold, so <= 3 at the peak
@@ -2730,36 +2765,6 @@ def test_line_count_auto_compaction_exact_under_replay(spark, tmp_path):
               for r in dedup.read_line_counts_pruned(spark, idx, probe).collect()}
     # 12 epochs x 3 docs sharing the footer; the replay must NOT make it 39
     assert totals[fk] == 36, totals[fk]
-
-
-def test_single_eval_flag_equivalence(spark):
-    """single_eval=False (ADVICE r9: lineage-free localCheckpoint vs
-    executor-loss recompute) must be a pure execution-strategy choice:
-    identical results from ngram_jaccard_pairs, minhash_lsh_dedup_pairs
-    and the composed clean_corpus with the checkpoint off."""
-    from platypus_ingestion_plugins_spark.pipelines import clean_corpus
-
-    d = spark.createDataFrame(
-        [Row(doc_id=i,
-             text=("the quick brown fox jumps over the lazy dog " * 3
-                   + (f"tail {i % 4}" if i % 3 else "")))
-         for i in range(24)]
-    )
-    for fn in (dedup.ngram_jaccard_pairs, dedup.minhash_lsh_dedup_pairs):
-        on = {tuple(r) for r in fn(d, "text", "doc_id", threshold=0.5).collect()}
-        off = {tuple(r) for r in fn(
-            d, "text", "doc_id", threshold=0.5, single_eval=False
-        ).collect()}
-        assert on == off and on, fn.__name__
-    bench = d.filter("doc_id % 7 = 0").select("doc_id", "text")
-    on = {r.doc_id for r in clean_corpus(
-        d, benchmark=bench, min_quality=0.0, near_dup_threshold=0.3
-    ).collect()}
-    off = {r.doc_id for r in clean_corpus(
-        d, benchmark=bench, min_quality=0.0, near_dup_threshold=0.3,
-        single_eval=False,
-    ).collect()}
-    assert on == off
 
 
 def test_tar_export_commit_marker_and_staging_generations(spark, tmp_path):
