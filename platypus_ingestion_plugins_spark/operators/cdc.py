@@ -33,15 +33,19 @@ UPSERT_KINDS = ("+I", "+U")
 DELETE_KIND = "-D"
 SKIP_KIND = "-U"
 KNOWN_KINDS = ("+I", "+U", "-U", "-D")
+# source bookkeeping a changelog may carry; never part of the state
+CHANGELOG_META = ("_snapshot", "_snapshot_id", "_bucket")
 
 
 def last_wins(
     df: DataFrame,
     key: str | list[str],
-    seq_col: str = SEQ_COL,
+    seq_col: str | list[str] = SEQ_COL,
     kind_col: str = ROW_KIND_COL,
 ) -> DataFrame:
     """Reduce a changelog to one row per key: the highest-sequence op.
+    Several ``seq_col`` compare in order: the serving table orders its
+    delta runs by (run, seq).
 
     -U (update-before) rows are dropped first — they never carry final
     state (PaimonRowProcessor.java:152-158) — as are unknown row kinds
@@ -52,8 +56,9 @@ def last_wins(
     insert-then-delete E2E).
     """
     keys = [key] if isinstance(key, str) else list(key)
+    seqs = [seq_col] if isinstance(seq_col, str) else list(seq_col)
     w = Window.partitionBy(*keys).orderBy(
-        F.col(seq_col).desc(),
+        *[F.col(c).desc() for c in seqs],
         # tie-break: delete outranks upsert at equal seq
         F.when(F.col(kind_col) == DELETE_KIND, 1).otherwise(0).desc(),
     )
@@ -75,25 +80,25 @@ def split_upserts_deletes(final_ops: DataFrame, kind_col: str = ROW_KIND_COL) ->
 def merge_upsert(
     target: DataFrame | None,
     upserts: DataFrame,
-    deletes: DataFrame,
+    changed: DataFrame,
     key: str | list[str],
-    seq_col: str = SEQ_COL,
     allow_schema_evolution: bool = True,
 ) -> DataFrame:
     """MERGE semantics without Delta: last-write-wins against a target.
 
     Equivalent of the sink's addDocuments-upsert + deleteByQuery
-    (PaimonRowProcessor.java:242-260): keys in ``deletes`` are removed,
-    keys in ``upserts`` replace existing rows, everything else is kept.
-    Implemented as anti-join + union — both joins are key-hash joins
-    Catalyst can broadcast when the changelog side is small (the usual
-    case: micro-batch << serving table).
+    (PaimonRowProcessor.java:242-260): the target rows whose key is in
+    ``changed`` (the key of every final op, upsert or delete) are
+    removed, ``upserts`` are added, everything else is kept.
+    Implemented as anti-join + union — a key-hash join Catalyst can
+    broadcast when the changelog side is small (the usual case:
+    micro-batch << serving table). A repeated key in ``changed``
+    changes nothing in an anti-join, so it need not be deduplicated.
     """
-    keys = [key] if isinstance(key, str) else list(key)
-    changed_keys = upserts.select(*keys).union(deletes.select(*keys)).distinct()
     if target is None:
         return upserts
-    kept = target.join(changed_keys, on=keys, how="left_anti")
+    keys = [key] if isinstance(key, str) else list(key)
+    kept = target.join(changed.select(*keys), on=keys, how="left_anti")
     # add-column evolution: a new column in the changelog widens the
     # table (existing rows read NULL); a column missing from the batch
     # stays NULL on its rows. Matches lakehouse upsert-sink behavior;
@@ -105,7 +110,7 @@ def apply_changelog(
     changelog: DataFrame,
     key: str | list[str],
     target: DataFrame | None = None,
-    seq_col: str = SEQ_COL,
+    seq_col: str | list[str] = SEQ_COL,
     kind_col: str = ROW_KIND_COL,
     drop_meta: bool = True,
     allow_schema_evolution: bool = True,
@@ -115,12 +120,14 @@ def apply_changelog(
     Returns the materialized serving state (one row per live key).
     """
     final_ops = last_wins(changelog, key, seq_col=seq_col, kind_col=kind_col)
-    upserts, deletes = split_upserts_deletes(final_ops, kind_col=kind_col)
+    upserts, _ = split_upserts_deletes(final_ops, kind_col=kind_col)
     if drop_meta:
-        meta = [c for c in (seq_col, "_snapshot", "_snapshot_id", "_bucket") if c in upserts.columns]
-        upserts = upserts.drop(*meta)
-        deletes = deletes.drop(*meta)
+        seqs = [seq_col] if isinstance(seq_col, str) else list(seq_col)
+        upserts = upserts.drop(*[c for c in (*seqs, *CHANGELOG_META) if c in upserts.columns])
+    # every key with a final op loses its target row, whichever the op:
+    # read off the changelog itself, so the last-wins window runs once
+    changed = changelog.filter(F.col(kind_col).isin(*UPSERT_KINDS, DELETE_KIND))
     return merge_upsert(
-        target, upserts, deletes, key, seq_col=seq_col,
+        target, upserts, changed, key,
         allow_schema_evolution=allow_schema_evolution,
     )

@@ -2,27 +2,40 @@
 
 Reference sink: addDocuments-upsert + deleteByQuery + commit per batch
 (PaimonRowProcessor.java:242-260; KafkaIngestor.java:251-289). Spark
-has no Lucene index; the serving layer is a parquet table that always
-holds exactly one live row per key, merged per micro-batch via the
-CDC reduce (operators/cdc.py). Merges are idempotent — replaying a
-batch after a failed checkpoint converges to the same state, which is
-the at-least-once-to-effectively-once upgrade the reference gets from
+has no Lucene index; the serving layer is a parquet table whose reads
+hold exactly one live row per key, merged per micro-batch via the CDC
+reduce (operators/cdc.py). Merges are idempotent — replaying a batch
+after a failed checkpoint converges to the same state, which is the
+at-least-once-to-effectively-once upgrade the reference gets from
 commit-after-index (KafkaIngestor.java:204-230).
 
-Scale design (100 TB): with ``num_buckets`` set the table is laid out
-as hash-bucket partitions (``__bucket = pmod(hash(key), N)``) and a
-micro-batch rewrites ONLY the buckets containing changed keys, so
-per-batch cost is O(touched buckets), not O(table).
-``num_buckets=0`` keeps the simple full rewrite for small tables.
+Merge-on-read, after Paimon's sorted runs (PaimonIngestor.java:673-701):
+a micro-batch does not read the table. It reduces its changelog to one
+last-wins op per key and appends the result as one delta run per
+bucket it touches: one file per bucket, keeping ``_row_kind``, ``_seq``
+and ``_run``, the id of the snapshot that added it. A reader of a
+snapshot with runs merges them into the base with the same last-wins,
+ordered by (``_run``, ``_seq``), so a later batch wins whatever its
+``_seq``; a reader of a snapshot without runs scans the base alone.
+When a bucket would hold more than ``MAX_RUNS`` runs, the batch's own
+commit folds that bucket instead: base, runs and batch in one last-wins
+pass and one anti-join, written as the bucket's new base. ``compact()``
+folds every run the same way.
+
+Layout: with ``num_buckets`` set the table is hash-bucket partitions
+(``__bucket = pmod(hash(key), N)``), so a batch writes O(its changed
+keys) and a point lookup scans one bucket. ``num_buckets=0`` keeps one
+bucket, the root.
 
 Commit protocol: Paimon-style numbered snapshots
 (platypus_ingestion_plugins_spark.snapshots). Data files are immutable
 and uniquely named, under ``{path}/__bucket=b/`` (``{path}/`` when
 unbucketed); each commit publishes ``{path}/_snapshots/N.json`` listing
-the live files per bucket, and a reader pins the newest snapshot and
-scans exactly those files. Reads never write. A directory holding data
-but no ``_snapshots/`` (a table written before snapshot commits) is
-refused by the first commit, not cleaned. One writer per table.
+the live files per bucket, which of them are delta runs, and the key
+the table merges on. A reader pins the newest snapshot and scans
+exactly those files. Reads never write. A directory holding data but
+no ``_snapshots/`` (a table written before snapshot commits) is refused
+by the first commit, not cleaned. One writer per table.
 
 All file operations go through the Hadoop FileSystem API
 (platypus_ingestion_plugins_spark.fs), so ``path`` may be local,
@@ -32,15 +45,31 @@ All file operations go through the Hadoop FileSystem API
 from __future__ import annotations
 
 import json
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from platypus_ingestion_plugins_spark import fs
-from platypus_ingestion_plugins_spark.operators.cdc import apply_changelog
+from platypus_ingestion_plugins_spark.operators.cdc import (
+    CHANGELOG_META,
+    DELETE_KIND,
+    ROW_KIND_COL,
+    SEQ_COL,
+    UPSERT_KINDS,
+    apply_changelog,
+    last_wins,
+)
 from platypus_ingestion_plugins_spark.snapshots import SnapshotLog
 
 BUCKET_COL = "__bucket"
+RUN_COL = "_run"
+RUN_META = (ROW_KIND_COL, SEQ_COL, RUN_COL)
+# A bucket holds at most this many delta runs: the batch that would add
+# one more folds the bucket instead (Paimon's default
+# num-sorted-run.compaction-trigger, 5 sorted runs, counts the base).
+MAX_RUNS = 4
 
 
 class ServingTable:
@@ -66,33 +95,82 @@ class ServingTable:
         # caught before any data lands
         self.auto_register_fields = auto_register_fields
         self._log = SnapshotLog(spark, self.path)
-        self._frame: tuple[dict, DataFrame] | None = None  # (snapshot, its frame)
+        # (snapshot, (base, runs, merged)): the frames read from it
+        self._frame: tuple[dict, tuple] | None = None
 
     def _bucket_col(self) -> Column:
+        if not self.num_buckets:
+            return F.lit(0)
         return F.pmod(F.hash(*[F.col(k) for k in self.key]), F.lit(self.num_buckets))
+
+    def _dir(self, bucket: int) -> str:
+        """A bucket's snapshot directory key ("" is the root)."""
+        return f"{BUCKET_COL}={bucket}" if self.num_buckets else ""
 
     def _latest(self) -> dict | None:
         """The newest snapshot, or None for a table never committed."""
         return self._log.latest()
 
+    def _key(self, snap: dict) -> list[str]:
+        """The key ``snap``'s table merges on (snapshots written before
+        it was recorded: this handle's)."""
+        return snap.get("key", self.key)
+
+    def _check_key(self, snap: dict | None) -> None:
+        """A writer must merge on the key the table was committed with:
+        another key would silently merge different rows."""
+        if snap is not None and self._key(snap) != self.key:
+            raise ValueError(
+                f"serving table {self.path} is keyed on {self._key(snap)}, "
+                f"not {self.key}"
+            )
+
     def exists(self) -> bool:
         return self._latest() is not None
 
     def read(self, snapshot: dict | None = None) -> DataFrame | None:
-        """The rows of ``snapshot`` (default: the newest; None for a
-        table never committed), read under its schema: after
+        """The live rows of ``snapshot`` (default: the newest; None for
+        a table never committed), read under its schema: after
         add-column evolution older files read NULL for the new
-        columns, and a snapshot with no files is an empty frame. The
-        frame is reused while the snapshot is unchanged (its files are
-        immutable): Spark resolving a read of named files costs more,
-        and varies more, than planning a query on it."""
+        columns, and a snapshot with no files is an empty frame. With
+        delta runs, the base merged with them on the table's recorded
+        key. The frame is reused while the snapshot is unchanged (its
+        files are immutable): Spark resolving a read of named files
+        costs more, and varies more, than planning a query on it."""
         snap = snapshot or self._latest()
         if snap is None:
             return None
-        frame = self._frame
-        if frame is None or frame[0] != snap:
-            frame = self._frame = (snap, self._log.read(snap))
-        return frame[1]
+        return self._pin(snap)[2]
+
+    def _pin(self, snap: dict) -> tuple[DataFrame, DataFrame | None, DataFrame]:
+        """(base, runs, merged) frames of ``snap``, built once."""
+        if self._frame is None or self._frame[0] != snap:
+            base, runs = self._scan(snap)
+            merged = base if runs is None else self._merge(snap, base, runs)
+            self._frame = (snap, (base, runs, merged))
+        return self._frame[1]
+
+    def _scan(self, snap: dict, dirs: list[str] | None = None) -> tuple[DataFrame, DataFrame | None]:
+        """``snap``'s base rows and its delta runs (None when it has
+        none), in ``dirs`` only when given. The base reads without the
+        run columns, so a snapshot without runs reads as plain rows."""
+        runs = {
+            d: {n for run in r for n in run}
+            for d, r in snap.get("runs", {}).items()
+            if dirs is None or d in dirs
+        }
+        schema = snap["schema"]
+        data = {**schema, "fields": [f for f in schema["fields"] if f["name"] not in RUN_META]}
+        base_files = {d: [n for n in names if n not in runs.get(d, ())] for d, names in snap["files"].items()}
+        base = self._log.read({**snap, "schema": data, "files": base_files}, dirs)
+        if not runs:
+            return base, None
+        return base, self._log.read({**snap, "files": {d: sorted(r) for d, r in runs.items()}}, dirs)
+
+    def _merge(self, snap: dict, base: DataFrame, runs: DataFrame) -> DataFrame:
+        """The base with the runs' last op per key applied, later runs
+        first."""
+        return apply_changelog(runs, self._key(snap), target=base, seq_col=[RUN_COL, SEQ_COL])
 
     def commits(self) -> list[dict]:
         """The commit log (oldest first); empty for a fresh table.
@@ -112,7 +190,7 @@ class ServingTable:
         if self.auto_register_fields or snap is None:
             return  # the first-ever batch REGISTERS the schema
         known = {f["name"] for f in snap["schema"]["fields"]}
-        internal = {BUCKET_COL, "_row_kind", "_seq", "_is_poison", "_snapshot"}
+        internal = {BUCKET_COL, *RUN_META, "_is_poison", *CHANGELOG_META}
         unknown = sorted(set(changelog.columns) - known - internal)
         if unknown:
             raise ValueError(
@@ -125,14 +203,16 @@ class ServingTable:
         self,
         snap: dict | None,
         df: DataFrame,
-        buckets: list[int] | None,
+        replace: list[int] | None,
         kind: str,
         n_rows: int,
+        append: tuple[int, ...] | list[int] = (),
     ) -> None:
-        """The one commit path: write ``df`` as new files replacing
-        ``buckets`` (None: the whole table) of ``snap``, publish the
-        next snapshot with the commit record, then append the record
-        to the log."""
+        """The one commit path: write ``df`` as new files that replace
+        the buckets ``replace`` (None: the whole table) of ``snap`` and
+        add one delta run to each bucket in ``append``, publish the
+        next snapshot with the commit record, then append the record to
+        the log."""
         log_path = f"{self.path}/_commits.json"
         raw = fs.read_text(self.spark, log_path)
         entries = json.loads(raw) if raw else []
@@ -140,45 +220,57 @@ class ServingTable:
             "commit_id": (entries[-1]["commit_id"] + 1) if entries else 0,
             "kind": kind,
             "n_rows": n_rows,
-            "buckets": buckets,
+            "buckets": None if replace is None else sorted({*replace, *append}),
         }
-        meta = {"num_buckets": self.num_buckets, "commit": record}
+        replaced = None if replace is None else [self._dir(b) for b in replace]
+        appended = [self._dir(b) for b in append]
+
+        def meta(added: dict[str, list[str]]) -> dict:
+            # the runs of the buckets this commit keeps, plus its own
+            kept = (snap or {}).get("runs", {}) if replaced is not None else {}
+            runs = {d: r for d, r in kept.items() if d not in replaced}
+            for d in appended:
+                if d in added:
+                    runs[d] = [*runs.get(d, ()), added[d]]
+            return {"num_buckets": self.num_buckets, "key": self.key, "runs": runs, "commit": record}
+
+        into = None if replaced is None else sorted({*replaced, *appended})
+        df = df.withColumn(BUCKET_COL, self._bucket_col())  # replaces a scanned one
         if self.num_buckets:
-            df = df.withColumn(BUCKET_COL, self._bucket_col())  # replaces a scanned one
-            dirs = None if buckets is None else [f"{BUCKET_COL}={b}" for b in buckets]
-            self._log.commit(snap, df, meta, (BUCKET_COL,), dirs)
+            self._log.commit(snap, df, meta, (BUCKET_COL,), replaced, into)
         else:
-            self._log.commit(snap, df.drop(BUCKET_COL), meta)
+            self._log.commit(snap, df.drop(BUCKET_COL), meta, (), replaced, into)
         entries.append(record)
         fs.write_text_atomic(self.spark, log_path, json.dumps(entries[-1000:]))
 
     def overwrite(self, df: DataFrame) -> None:
         """Full rewrite: one commit whose snapshot lists only ``df``'s
-        files."""
+        files, keyed on this handle's key."""
         self._commit(self._latest(), df, None, "overwrite", -1)
 
     def apply_batch(self, changelog: DataFrame) -> None:
-        """Apply one CDC micro-batch: last-wins + merge + commit.
+        """Apply one CDC micro-batch: last-wins reduce, then one commit
+        that appends the result as one delta run per touched bucket
+        (folding the buckets that would hold more than ``MAX_RUNS``
+        runs). The table itself is not read, except the buckets a fold
+        rewrites. The first batch of a table, or the first after
+        ``num_buckets`` changed, writes the merged rows as its base.
 
-        Bucketed tables rewrite only the hash-bucket partitions whose
-        keys appear in the changelog; untouched buckets keep their
-        files and are not read or rewritten.
-
-        On the bucketed (scale) path the commit log's row count rides
-        the SAME aggregate action that finds the touched buckets — a
-        per-bucket count instead of a distinct — so no dedicated
-        ``changelog.count()`` rescans the source per micro-batch. (An
-        ``observe()`` metric was tried first and DEADLOCKS when
-        apply_batch runs inside ``foreachBatch``: the micro-batch's
-        DataFrame belongs to a cloned SparkSession whose listener bus
-        never delivers the observation, so ``Observation.get`` blocks
-        forever — don't reintroduce it.)"""
+        The commit log's row count rides the SAME aggregate action that
+        finds the touched buckets — a per-bucket count instead of a
+        distinct — so no dedicated ``changelog.count()`` rescans the
+        source per micro-batch. (An ``observe()`` metric was tried
+        first and DEADLOCKS when apply_batch runs inside
+        ``foreachBatch``: the micro-batch's DataFrame belongs to a
+        cloned SparkSession whose listener bus never delivers the
+        observation, so ``Observation.get`` blocks forever — don't
+        reintroduce it.)"""
         snap = self._latest()
+        self._check_key(snap)
         self._check_registered_fields(changelog, snap)
-        current = self.read(snap) if snap else None
-        if current is None or not self.num_buckets or snap["num_buckets"] != self.num_buckets:
-            if current is not None:
-                current = current.drop(BUCKET_COL)
+        changelog = changelog.drop(*CHANGELOG_META)
+        if snap is None or snap["num_buckets"] != self.num_buckets:
+            current = self.read(snap).drop(BUCKET_COL) if snap else None
             merged = apply_changelog(changelog, self.key, target=current)
             self._commit(snap, merged, None, "batch", changelog.count())
             return
@@ -190,71 +282,112 @@ class ServingTable:
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         )
-        changed = sorted(r["b"] for r in per_bucket)
-        if not changed:
+        touched = sorted(r["b"] for r in per_bucket)
+        if not touched:
             return
-        target = current.filter(F.col(BUCKET_COL).isin(changed)).drop(BUCKET_COL)  # pruned scan
-        merged = apply_changelog(changelog, self.key, target=target)
-        self._commit(snap, merged, changed, "batch", sum(r["n"] for r in per_bucket))
+        runs = snap.get("runs", {})
+        fold = [b for b in touched if len(runs.get(self._dir(b), ())) >= MAX_RUNS]
+        rows = self._delta(snap, changelog, fold, len(touched))
+        append = [b for b in touched if b not in fold]
+        self._commit(snap, rows, fold, "batch", sum(r["n"] for r in per_bucket), append)
+
+    def _delta(self, snap: dict, changelog: DataFrame, fold: list[int], parts: int) -> DataFrame:
+        """The rows a batch writes: its changelog reduced to the last op
+        per key, with the run columns. In the buckets of ``fold`` the
+        bucket's runs join that reduce and its result, applied to the
+        base, is written without them: the bucket's new base."""
+        data = T.StructType(
+            [
+                T.StructField.fromJson(f)
+                for f in snap["schema"]["fields"]
+                if f["name"] not in (*RUN_META, BUCKET_COL)
+            ]
+        )
+        # every run carries the table's columns (NULL where the batch
+        # has none) and widens the table by the batch's new ones
+        ops = self.spark.createDataFrame([], data).unionByName(changelog, allowMissingColumns=True)
+        if isinstance(ops.schema[SEQ_COL].dataType, T.IntegralType):
+            ops = ops.withColumn(SEQ_COL, F.col(SEQ_COL).cast("long"))
+        ops = ops.withColumn(RUN_COL, F.lit(snap["id"] + 1).cast("long")).withColumn(
+            BUCKET_COL, self._bucket_col()
+        )
+        if fold:
+            base, runs = self._scan(snap, [self._dir(b) for b in fold])
+            ops = ops.unionByName(runs, allowMissingColumns=True)
+        # one shuffle: a bucket's ops meet in one task, which the window
+        # (keyed by bucket and key) runs in place, so a run is one file
+        final = last_wins(
+            ops.repartition(parts, BUCKET_COL), [BUCKET_COL, *self.key], seq_col=[RUN_COL, SEQ_COL]
+        )
+        cols = [c for c in final.columns if c not in (*RUN_META, BUCKET_COL)] + [*RUN_META, BUCKET_COL]
+        if not fold:
+            return final.select(*cols)
+        in_fold = F.col(BUCKET_COL).isin(fold)
+        upserts = final.filter(~in_fold | (F.col(ROW_KIND_COL) != DELETE_KIND)).select(
+            *[F.when(~in_fold, F.col(c)).alias(c) if c in RUN_META else c for c in cols]
+        )
+        changed = ops.filter(in_fold & F.col(ROW_KIND_COL).isin(*UPSERT_KINDS, DELETE_KIND))
+        kept = base.join(changed.select(*self.key), self.key, "left_anti")
+        return upserts.unionByName(kept, allowMissingColumns=True)
 
     def compact(self, max_files_per_bucket: int = 4) -> list[int]:
-        """Small-file compaction: rewrite buckets holding more than
-        ``max_files_per_bucket`` files in the latest snapshot down to
-        one parquet file each, through the same commit as apply_batch.
+        """Fold every delta run into its bucket's base, and rewrite the
+        buckets holding more than ``max_files_per_bucket`` files, each
+        down to one parquet file, through the same commit as
+        apply_batch. Returns the bucket ids rewritten (``[0]`` for an
+        unbucketed table).
 
-        Every micro-batch write fans a bucket's rows across its shuffle
-        tasks, so a hot bucket accumulates up to #tasks files per
-        rewrite; query-side scan cost grows with file count, not data
-        size (the classic streaming-sink pathology at scale — the
-        reference delegates this to Paimon's own compaction). Returns
-        the bucket ids compacted.
-
-        Unbucketed tables compact to a single file via the full-rewrite
-        path when the table holds too many files.
-        """
+        A fold inside a batch keeps a bucket at ``MAX_RUNS`` runs or
+        fewer; this folds them all, so the snapshot that follows reads
+        without a merge. A bucket whose keys were all deleted leaves
+        the snapshot here. Writes fan a bucket's rows across their
+        tasks, so a rewritten bucket holds up to #tasks files; scan
+        cost grows with file count, not data size (the classic
+        streaming-sink pathology at scale — the reference delegates
+        this to Paimon's own compaction)."""
         snap = self._latest()
         if snap is None:
             return []
-        if not self.num_buckets:
-            if len(snap["files"].get("", [])) <= max_files_per_bucket:
-                return []
-            self.overwrite(self.query().coalesce(1))
-            return [0]
-        oversized = sorted(
-            int(d.split("=", 1)[1])
-            for d, names in snap["files"].items()
-            if d.startswith(f"{BUCKET_COL}=") and len(names) > max_files_per_bucket
+        self._check_key(snap)
+        runs = snap.get("runs", {})
+        dirs = sorted(
+            d for d, names in snap["files"].items()
+            if d in runs or len(names) > max_files_per_bucket
         )
-        if not oversized:
+        if not dirs:
             return []
-        # one shuffle partition per bucket -> exactly one output file each
-        rows = (
-            self.read(snap)
-            .filter(F.col(BUCKET_COL).isin(oversized))
-            .repartition(len(oversized), F.col(BUCKET_COL))
-        )
-        self._commit(snap, rows, oversized, "compact", -1)
-        return oversized
+        base, ops = self._scan(snap, dirs)
+        rows = base if ops is None else self._merge(snap, base, ops)
+        buckets = [int(d.split("=", 1)[1]) if d else 0 for d in dirs]
+        if snap["num_buckets"]:
+            # one shuffle partition per bucket -> exactly one output file each
+            rows = rows.repartition(len(dirs), F.col(BUCKET_COL))
+        else:
+            rows = rows.coalesce(1)
+        self._commit(snap, rows, buckets, "compact", -1)
+        return buckets
 
     def query(self) -> DataFrame:
         df = self.read()
         if df is None:
             raise FileNotFoundError(f"serving table {self.path} does not exist yet")
-        if BUCKET_COL in df.columns:
-            df = df.drop(BUCKET_COL)
-        return df
+        return df.drop(BUCKET_COL)
 
     def lookup(self, *key_values) -> DataFrame:
         """Point lookup by key: on a bucketed table the key's bucket is
-        computed at plan time, so the scan partition-prunes to ONE
+        computed at plan time, so the scans partition-prune to ONE
         bucket's files (~1/num_buckets of the files) — the serving
-        layer's Q3 term query at its cheapest. Falls back to a plain
-        filter on unbucketed tables."""
-        if len(key_values) != len(self.key):
-            raise ValueError(f"lookup expects {len(self.key)} value(s) for key {self.key}")
-        df = self.read()
-        if df is None:
+        layer's Q3 term query at its cheapest. With delta runs the
+        predicate filters the base and the runs before they merge, so
+        both prune. Falls back to a plain filter on unbucketed
+        tables."""
+        snap = self._latest()
+        if snap is None:
             raise FileNotFoundError(f"serving table {self.path} does not exist yet")
+        df = self.read(snap)
+        key = self._key(snap)
+        if len(key_values) != len(key):
+            raise ValueError(f"lookup expects {len(key)} value(s) for key {key}")
         # murmur3 is TYPE-sensitive: hash(5 as int) != hash(5 as bigint),
         # and a bare Python int literal becomes IntegerType while keys
         # written through createDataFrame/parquet are typically LongType.
@@ -263,18 +396,15 @@ class ServingTable:
         # otherwise the bucket filter prunes to the WRONG directory and
         # the lookup silently returns nothing. Casts of literals fold at
         # plan time, so partition pruning is preserved.
-        lits = [
-            F.lit(v).cast(df.schema[k].dataType)
-            for k, v in zip(self.key, key_values)
-        ]
-        cond = None
-        for k, lit in zip(self.key, lits):
-            c = F.col(k) == lit
-            cond = c if cond is None else cond & c
-        if self.num_buckets and BUCKET_COL in df.columns:
-            b = F.pmod(F.hash(*lits), F.lit(self.num_buckets))
+        lits = [F.lit(v).cast(df.schema[k].dataType) for k, v in zip(key, key_values)]
+        cond = reduce(lambda a, b: a & b, [F.col(k) == lit for k, lit in zip(key, lits)])
+        if snap["num_buckets"]:
+            b = F.pmod(F.hash(*lits), F.lit(snap["num_buckets"]))
             cond = (F.col(BUCKET_COL) == b) & cond
-        return df.filter(cond).drop(BUCKET_COL) if BUCKET_COL in df.columns else df.filter(cond)
+        base, runs, _ = self._pin(snap)
+        if runs is None:
+            return df.filter(cond).drop(BUCKET_COL)
+        return self._merge(snap, base.filter(cond), runs.filter(cond)).drop(BUCKET_COL)
 
 
 def update_by_query(
@@ -285,17 +415,19 @@ def update_by_query(
     """Elasticsearch ``_update_by_query`` on the serving table
     (NEW r15): apply column ``assignments`` to every CURRENT row
     matching ``predicate``, routed through the SAME CDC apply path as
-    any ingest batch (last-wins merge, bucket-pruned rewrite, commit
-    log) — updates are upsert batches, not a second write path, so
-    crash recovery, schema checks, and read-your-writes hold without
-    new machinery. Returns the number of rows updated.
+    any ingest batch (last-wins reduce, delta-run append, commit log)
+    — updates are upsert batches, not a second write path, so crash
+    recovery, schema checks, and read-your-writes hold without new
+    machinery. Returns the number of rows updated.
 
     Scale shape: one read + filter (bucket/partition pruning applies
     to the predicate like any query), assignments are codegen
-    expressions, and ``apply_batch`` rewrites ONLY the touched
-    buckets. Assigning a key column is rejected — that is a delete +
-    insert, not an update (ES rejects id reassignment in scripts for
-    the same reason)."""
+    expressions, and ``apply_batch`` appends one delta run per touched
+    bucket. The run orders after every earlier batch although its
+    ``_seq`` (``monotonically_increasing_id``) starts again at 0.
+    Assigning a key column is rejected — that is a delete + insert,
+    not an update (ES rejects id reassignment in scripts for the same
+    reason)."""
     for col in assignments:
         if col in table.key:
             raise ValueError(
@@ -310,7 +442,7 @@ def update_by_query(
     changelog = upd.withColumn("_row_kind", F.lit("+U")).withColumn(
         "_seq", F.monotonically_increasing_id()
     )
-    # the changelog is derived from the very files apply_batch replaces
+    # the changelog is derived from files a fold in apply_batch replaces
     # and apply_batch evaluates it more than once — pin it
     # (lineage-free) BEFORE the apply so every pass sees the same rows
     changelog = changelog.localCheckpoint(eager=True)

@@ -26,6 +26,7 @@ operation is a call through the ``fs`` module, looked up at call time.
 from __future__ import annotations
 
 import json
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -132,9 +133,10 @@ class SnapshotLog:
         self,
         snap: dict | None,
         df: DataFrame | dict[str, DataFrame],
-        meta: dict,
+        meta: dict | Callable[[dict[str, list[str]]], dict],
         partition_by: tuple[str, ...] = (),
         replace: list[str] | None = None,
+        into: list[str] | None = None,
     ) -> dict:
         """Append ``df`` as new files and publish the snapshot after
         ``snap`` with ``meta``; returns it. ``df`` is the root table's
@@ -144,9 +146,11 @@ class SnapshotLog:
         ``replace`` names the directories whose files in ``snap`` the
         new ones replace: None is every directory, ``[]`` none (an
         append), a list exactly those ("__bucket=3", "band=0/vb=3", ""
-        for the root, "_termdict" for a sub-table). A list naming root
-        directories ("" or "k=v") says the root frame writes only into
-        those.
+        for the root, "_termdict" for a sub-table). ``into`` names the
+        root directories ("" or "k=v") the root frame writes into; by
+        default those ``replace`` names, and with none named, any.
+        ``meta`` may be a callable: it is given the files this commit
+        added, by directory, and returns the metadata.
 
         Garbage is the parquet on disk that ``snap`` does not reference:
         the files the commit that made ``snap`` replaced, and a crashed
@@ -166,7 +170,7 @@ class SnapshotLog:
         # listing finds the files of one a commit dropped
         tables = dict(snap.get("tables", {})) if snap else {}
         tables.update((t, f.schema.jsonValue()) for t, f in frames.items() if t)
-        parts = [d for d in replace or () if d == "" or "=" in d]
+        parts = into if into is not None else [d for d in replace or () if d == "" or "=" in d]
         written = None if "" in frames and not parts else parts + [t for t in frames if t]
         if snap is None:
             self._claim()
@@ -185,9 +189,11 @@ class SnapshotLog:
 
         after = self._on_disk(written, tables)
         files = {} if replace is None else {d: f for d, f in live.items() if d not in replace}
+        added = {}
         for d, names in after.items():
             new = names - on_disk.get(d, set())
             if new:
+                added[d] = sorted(new)
                 files[d] = sorted(new.union(files.get(d, ())))
         for d, names in on_disk.items():
             for name in sorted(names - set(live.get(d, ()))):
@@ -208,7 +214,7 @@ class SnapshotLog:
             "replaced": replace,
             "schema": schema,
             "tables": tables,
-            **meta,
+            **(meta(added) if callable(meta) else meta),
         }
         tmp = self._file(n) + ".tmp"
         fs.write_text(self.spark, tmp, json.dumps(new_snap))

@@ -18,7 +18,7 @@ from pyspark.sql import Row
 from pyspark.sql import types as T
 
 from platypus_ingestion_plugins_spark import fs
-from platypus_ingestion_plugins_spark.serving.table import BUCKET_COL, ServingTable
+from platypus_ingestion_plugins_spark.serving.table import BUCKET_COL, MAX_RUNS, ServingTable
 
 CDC_SCHEMA = T.StructType(
     [
@@ -112,13 +112,21 @@ def test_partial_rewrite_drops_emptied_bucket_dir(spark, tmp_path):
     b = _bucket_of(spark, tbl, "only")
     assert os.path.isdir(os.path.join(path, f"{BUCKET_COL}={b}"))
 
+    part = f"{BUCKET_COL}={b}"
     tbl.apply_batch(_batch(spark, (2, "-D", "only", "v1")))
-    assert f"{BUCKET_COL}={b}" not in tbl._latest()["files"]
+    # the delete is a delta run beside the base until the bucket folds
+    assert len(tbl._latest()["runs"][part]) == 1
+    assert tbl.query().count() == 0 and tbl.lookup("only").count() == 0
+    assert tbl.compact() == [b]
+    assert part not in tbl._latest()["files"]
     assert tbl.query().count() == 0
-    # the emptied bucket's file served the previous snapshot; the next
-    # commit deletes it
+    # the emptied bucket's files served the previous snapshot; the next
+    # commit deletes them
+    stale = set(_parquet_in(os.path.join(path, part)))
+    assert len(stale) == 2
     tbl.apply_batch(_batch(spark, (3, "-D", "only", "v1")))
-    assert _parquet_in(os.path.join(path, f"{BUCKET_COL}={b}")) == []
+    assert _parquet_in(os.path.join(path, part)) == tbl._latest()["files"][part]
+    assert not stale & set(tbl._latest()["files"][part])
 
 
 def test_full_rewrite_crash_between_renames_recovers(spark, tmp_path):
@@ -364,6 +372,19 @@ def test_lookup_prunes_to_one_bucket(spark, tmp_path):
     assert len(touched) == 1
     # missing key -> empty, not an error
     assert tbl.lookup("ghost").count() == 0
+
+    # with delta runs the base and the runs both prune to the key's bucket
+    tbl.apply_batch(_batch(spark, (100, "+U", "k7", "v8"), (101, "-D", "k9", "v9")))
+    assert tbl._latest()["runs"]
+    hit = tbl.lookup("k7")
+    assert [(r.id, r.title) for r in hit.collect()] == [("k7", "v8")]
+    assert tbl.lookup("k9").count() == 0
+    b = _bucket_of(spark, tbl, "k7")
+    plan = hit._jdf.queryExecution().executedPlan().toString()
+    scans = [line for line in plan.splitlines() if "FileScan parquet" in line]
+    assert len(scans) >= 2  # the base and the runs
+    for scan in scans:
+        assert f"= {b})" in scan.split("PartitionFilters:")[1].split("]")[0], scan
 
 
 def test_schema_evolution_adds_column(spark, tmp_path):
@@ -738,9 +759,10 @@ def test_missing_hinted_snapshot_raises(spark, tmp_path):
 
 
 def test_partial_commit_lists_only_touched_buckets(spark, tmp_path, monkeypatch):
-    """A bucketed commit lists only the buckets it rewrites and those the
-    previous commit replaced. A leftover in any other bucket is never
-    read, and goes when its bucket is next rewritten."""
+    """A bucketed commit lists only the buckets it writes and those the
+    previous commit replaced: an append replaces nothing, a fold its
+    bucket. A leftover in any other bucket is never read, and goes when
+    its bucket is next written."""
     path = str(tmp_path / "scoped")
     tbl = ServingTable(spark, path, key="id", num_buckets=8)
     keys = {}
@@ -748,20 +770,160 @@ def test_partial_commit_lists_only_touched_buckets(spark, tmp_path, monkeypatch)
         keys.setdefault(_bucket_of(spark, tbl, f"k{i}"), f"k{i}")
     b1, b2, b3 = sorted(keys)[:3]
     tbl.apply_batch(_batch(spark, *[(i, "+I", k, "v1") for i, k in enumerate(keys.values())]))
-    tbl.apply_batch(_batch(spark, (100, "+U", keys[b1], "v2")))
+    for s in range(MAX_RUNS):
+        tbl.apply_batch(_batch(spark, (100 + s, "+U", keys[b1], "v2")))
     leftover = os.path.join(path, f"{BUCKET_COL}={b3}", "part-00000-crashed.c000.snappy.parquet")
     _plant_parquet(leftover, id=[keys[b3]], title=["torn"])
 
     listed = []
     real = fs.list_names
     monkeypatch.setattr(fs, "list_names", lambda s, p: listed.append(p) or real(s, p))
-    tbl.apply_batch(_batch(spark, (101, "+U", keys[b2], "v2")))
+    tbl.apply_batch(_batch(spark, (110, "+U", keys[b1], "v3")))  # folds b1
+    assert f"{BUCKET_COL}={b1}" not in tbl._latest()["runs"]
+    assert sorted(listed) == [f"{path}/{BUCKET_COL}={b1}"] * 2  # before and after the write
+    listed.clear()
+    tbl.apply_batch(_batch(spark, (111, "+U", keys[b2], "v2")))
     assert sorted(listed) == sorted(
         f"{path}/{BUCKET_COL}={b}" for b in (b1, b2, b2)  # b2 again after the write
     )
     assert os.path.exists(leftover)
     assert tbl.lookup(keys[b3]).collect()[0].title == "v1"
 
-    tbl.apply_batch(_batch(spark, (102, "+U", keys[b3], "v2")))
+    tbl.apply_batch(_batch(spark, (112, "+U", keys[b3], "v2")))
     assert not os.path.exists(leftover)
     assert tbl.query().count() == len(keys)
+    assert tbl.lookup(keys[b1]).collect()[0].title == "v3"
+
+
+def _last_wins(changelog, start=None):
+    """Pure-Python state after applying ``changelog`` batches in order:
+    a later batch wins whatever its ``_seq``; within a batch the
+    highest ``_seq`` wins and a delete outranks an upsert at equal
+    ``_seq``."""
+    state = dict(start or {})
+    for ops in changelog:
+        final = {}
+        for seq, kind, key, row in ops:
+            if kind == "-U":
+                continue
+            rank = (seq, kind == "-D")
+            if key not in final or rank > final[key][0]:
+                final[key] = (rank, kind, row)
+        for key, (_rank, kind, row) in final.items():
+            if kind == "-D":
+                state.pop(key, None)
+            else:
+                state[key] = row
+    return state
+
+
+def test_apply_batch_refuses_another_key(spark, tmp_path):
+    """The key is snapshot metadata: a writer with another key raises
+    before any work, and reads merge on the recorded key whatever key
+    the handle was opened with."""
+    import pytest
+
+    path = str(tmp_path / "keyed")
+    tbl = ServingTable(spark, path, key="id", num_buckets=4)
+    tbl.apply_batch(_batch(spark, (1, "+I", "a", "v1"), (2, "+I", "b", "v1")))
+    tbl.apply_batch(_batch(spark, (3, "+U", "a", "v2")))
+    assert tbl._latest()["key"] == ["id"]
+    other = ServingTable(spark, path, key="title", num_buckets=4)
+    with pytest.raises(ValueError, match="keyed on"):
+        other.apply_batch(_batch(spark, (4, "+U", "a", "v3")))
+    assert tbl._latest()["id"] == 2
+    probe = ServingTable(spark, path, key="_probe", num_buckets=4)
+    assert sorted((r.id, r.title) for r in probe.query().collect()) == [("a", "v2"), ("b", "v1")]
+
+
+def test_ordering_across_runs_and_compaction(spark, tmp_path):
+    """Runs order by commit, then ``_seq``: an update_by_query whose
+    ``_seq`` restarts at 0 beats an earlier ingest batch, a delete then
+    a re-insert in later runs leaves the re-inserted row, and a
+    replayed batch changes nothing, before and after a compaction."""
+    from pyspark.sql import functions as F
+
+    from platypus_ingestion_plugins_spark.serving.table import update_by_query
+
+    tbl = ServingTable(spark, str(tmp_path / "order"), key="id", num_buckets=4)
+    tbl.apply_batch(_batch(spark, (1000, "+I", "a", "ingest"), (1001, "+I", "b", "v1")))
+    tbl.apply_batch(_batch(spark, (1002, "+U", "a", "ingest2")))
+    assert update_by_query(tbl, F.col("id") == "a", {"title": F.lit("updated")}) == 1
+    tbl.apply_batch(_batch(spark, (5, "-D", "b", "v1")))
+    reinsert = _batch(spark, (1, "+I", "b", "back"))
+    tbl.apply_batch(reinsert)
+    expected = {"a": "updated", "b": "back"}
+    assert {r.id: r.title for r in tbl.query().collect()} == expected
+    tbl.apply_batch(reinsert)  # at-least-once redelivery
+    assert {r.id: r.title for r in tbl.query().collect()} == expected
+    assert tbl.compact(max_files_per_bucket=0)
+    assert not tbl._latest().get("runs")
+    assert {r.id: r.title for r in tbl.query().collect()} == expected
+    tbl.apply_batch(reinsert)
+    assert {r.id: r.title for r in tbl.query().collect()} == expected
+    assert [r.title for r in tbl.lookup("a").collect()] == ["updated"]
+
+
+def test_random_batches_match_python_last_wins(spark, tmp_path):
+    """Random batches with hot keys, deletes, re-inserts and one
+    evolved column, across in-batch folds: after every batch query()
+    and a lookup in every bucket equal a pure-Python last-wins."""
+    rng = random.Random(11)
+    tbl = ServingTable(spark, str(tmp_path / "rand"), key="id", num_buckets=4)
+    keys = [f"k{i}" for i in range(24)]
+    probes = {}
+    for k in keys:
+        probes.setdefault(_bucket_of(spark, tbl, k), k)
+    assert len(probes) == 4
+    schema = T.StructType(list(CDC_SCHEMA.fields) + [T.StructField("lang", T.StringType())])
+    batches, folds = [], 0
+    for b in range(12):
+        ops = []
+        for _ in range(10):
+            key = rng.choice(keys[:3]) if rng.random() < 0.4 else rng.choice(keys)
+            kind = rng.choice(["+I", "+U", "+U", "-D", "-U"])
+            lang = f"l{b}" if b >= 6 and rng.random() < 0.5 else None
+            # _seq restarts every batch and repeats inside one
+            ops.append((rng.randrange(6), kind, key, (f"v{b}", lang)))
+        batches.append(ops)
+        rows = [Row(_seq=s, _row_kind=k, id=i, title=t, lang=l) for s, k, i, (t, l) in ops]
+        df = spark.createDataFrame(rows, schema)
+        tbl.apply_batch(df if b >= 6 else df.drop("lang"))
+        folds += tbl.commits()[-1]["buckets"] != sorted(
+            int(d.split("=")[1]) for d in tbl._latest()["runs"]
+        )
+        expected = _last_wins(batches)
+        got = {r.id: (r.title, r.asDict().get("lang")) for r in tbl.query().collect()}
+        assert got == expected, f"batch {b}"
+        for k in probes.values():
+            hit = [(r.title, r.asDict().get("lang")) for r in tbl.lookup(k).collect()]
+            assert hit == ([expected[k]] if k in expected else []), f"batch {b} key {k}"
+    assert folds, "no batch folded a bucket"
+
+
+def test_frame_pinned_before_appends_still_collects(spark, tmp_path):
+    """Appends replace no file, so a query() frame pinned before
+    several of them still collects, and reads the state it pinned."""
+    tbl = ServingTable(spark, str(tmp_path / "pin"), key="id", num_buckets=4)
+    tbl.apply_batch(_batch(spark, *[(i, "+I", f"k{i}", "v1") for i in range(16)]))
+    tbl.apply_batch(_batch(spark, (20, "+U", "k1", "v2")))
+    pinned = tbl.query()
+    for s in range(MAX_RUNS - 1):
+        tbl.apply_batch(_batch(spark, (30 + s, "+U", "k1", f"v{3 + s}"), (40 + s, "-D", f"k{2 + s}", "")))
+    got = {r.id: r.title for r in pinned.collect()}
+    assert len(got) == 16 and got["k1"] == "v2"
+    assert tbl.query().count() == 16 - (MAX_RUNS - 1)
+
+
+def test_plans_without_runs_have_no_merge(spark, tmp_path):
+    """A snapshot without delta runs reads as a plain scan: no Join and
+    no Window in the plans of query() and lookup()."""
+    tbl = ServingTable(spark, str(tmp_path / "plain"), key="id", num_buckets=4)
+    tbl.apply_batch(_batch(spark, *[(i, "+I", f"k{i}", "v1") for i in range(16)]))
+    tbl.apply_batch(_batch(spark, (20, "+U", "k1", "v2")))
+    assert tbl._latest()["runs"]
+    tbl.compact()
+    for df in (tbl.query(), tbl.lookup("k1")):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Join" not in plan and "Window" not in plan, plan
+    assert [r.title for r in tbl.lookup("k1").collect()] == ["v2"]
