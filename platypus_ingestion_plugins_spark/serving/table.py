@@ -19,8 +19,8 @@ ordered by (``_run``, ``_seq``), so a later batch wins whatever its
 ``_seq``; a reader of a snapshot without runs scans the base alone.
 When a bucket would hold more than ``MAX_RUNS`` runs, the batch's own
 commit folds that bucket instead: base, runs and batch in one last-wins
-pass and one anti-join, written as the bucket's new base. ``compact()``
-folds every run the same way.
+pass, the base as the oldest run, written as the bucket's new base.
+``compact()`` folds every run.
 
 Layout: with ``num_buckets`` set the table is hash-bucket partitions
 (``__bucket = pmod(hash(key), N)``), so a batch writes O(its changed
@@ -293,9 +293,10 @@ class ServingTable:
 
     def _delta(self, snap: dict, changelog: DataFrame, fold: list[int], parts: int) -> DataFrame:
         """The rows a batch writes: its changelog reduced to the last op
-        per key, with the run columns. In the buckets of ``fold`` the
-        bucket's runs join that reduce and its result, applied to the
-        base, is written without them: the bucket's new base."""
+        per key, with the run columns. The buckets of ``fold`` join that
+        reduce with their base as run 0 and their runs, and keep the
+        winners that are not deletes, without the run columns: the
+        bucket's new base."""
         data = T.StructType(
             [
                 T.StructField.fromJson(f)
@@ -308,14 +309,21 @@ class ServingTable:
         ops = self.spark.createDataFrame([], data).unionByName(changelog, allowMissingColumns=True)
         if isinstance(ops.schema[SEQ_COL].dataType, T.IntegralType):
             ops = ops.withColumn(SEQ_COL, F.col(SEQ_COL).cast("long"))
-        ops = ops.withColumn(RUN_COL, F.lit(snap["id"] + 1).cast("long")).withColumn(
-            BUCKET_COL, self._bucket_col()
-        )
+        ops = ops.withColumn(RUN_COL, F.lit(snap["id"] + 1).cast("long"))
         if fold:
             base, runs = self._scan(snap, [self._dir(b) for b in fold])
-            ops = ops.unionByName(runs, allowMissingColumns=True)
+            # the base is the oldest run: any op of a later one beats it
+            base = (
+                base.withColumn(ROW_KIND_COL, F.lit(UPSERT_KINDS[0]))
+                .withColumn(SEQ_COL, F.lit(0).cast("long"))
+                .withColumn(RUN_COL, F.lit(0).cast("long"))
+            )
+            for frame in (base, runs):
+                if frame is not None:
+                    ops = ops.unionByName(frame.drop(BUCKET_COL), allowMissingColumns=True)
         # one shuffle: a bucket's ops meet in one task, which the window
         # (keyed by bucket and key) runs in place, so a run is one file
+        ops = ops.withColumn(BUCKET_COL, self._bucket_col())
         final = last_wins(
             ops.repartition(parts, BUCKET_COL), [BUCKET_COL, *self.key], seq_col=[RUN_COL, SEQ_COL]
         )
@@ -323,19 +331,18 @@ class ServingTable:
         if not fold:
             return final.select(*cols)
         in_fold = F.col(BUCKET_COL).isin(fold)
-        upserts = final.filter(~in_fold | (F.col(ROW_KIND_COL) != DELETE_KIND)).select(
+        return final.filter(~in_fold | (F.col(ROW_KIND_COL) != DELETE_KIND)).select(
             *[F.when(~in_fold, F.col(c)).alias(c) if c in RUN_META else c for c in cols]
         )
-        changed = ops.filter(in_fold & F.col(ROW_KIND_COL).isin(*UPSERT_KINDS, DELETE_KIND))
-        kept = base.join(changed.select(*self.key), self.key, "left_anti")
-        return upserts.unionByName(kept, allowMissingColumns=True)
 
     def compact(self, max_files_per_bucket: int = 4) -> list[int]:
         """Fold every delta run into its bucket's base, and rewrite the
         buckets holding more than ``max_files_per_bucket`` files, each
         down to one parquet file, through the same commit as
         apply_batch. Returns the bucket ids rewritten (``[0]`` for an
-        unbucketed table).
+        unbucketed table). A handle whose ``num_buckets`` is not the
+        table's rewrites the whole table in its own layout, as
+        apply_batch does.
 
         A fold inside a batch keeps a bucket at ``MAX_RUNS`` runs or
         fewer; this folds them all, so the snapshot that follows reads
@@ -350,21 +357,24 @@ class ServingTable:
             return []
         self._check_key(snap)
         runs = snap.get("runs", {})
+        relayout = snap["num_buckets"] != self.num_buckets
         dirs = sorted(
             d for d, names in snap["files"].items()
-            if d in runs or len(names) > max_files_per_bucket
+            if relayout or d in runs or len(names) > max_files_per_bucket
         )
         if not dirs:
             return []
         base, ops = self._scan(snap, dirs)
         rows = base if ops is None else self._merge(snap, base, ops)
-        buckets = [int(d.split("=", 1)[1]) if d else 0 for d in dirs]
-        if snap["num_buckets"]:
+        buckets = list(range(self.num_buckets or 1)) if relayout else [
+            int(d.split("=", 1)[1]) if d else 0 for d in dirs
+        ]
+        if self.num_buckets:
             # one shuffle partition per bucket -> exactly one output file each
-            rows = rows.repartition(len(dirs), F.col(BUCKET_COL))
+            rows = rows.repartition(len(buckets), self._bucket_col())
         else:
             rows = rows.coalesce(1)
-        self._commit(snap, rows, buckets, "compact", -1)
+        self._commit(snap, rows, None if relayout else buckets, "compact", -1)
         return buckets
 
     def query(self) -> DataFrame:

@@ -13,6 +13,7 @@ import threading
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from pyspark.sql import Row
 from pyspark.sql import types as T
@@ -348,6 +349,24 @@ def test_compact_unbucketed(spark, tmp_path):
         assert tbl.compact(max_files_per_bucket=1) == [0]
     assert len(tbl._latest()["files"][""]) == 1
     assert {r.id: r.title for r in tbl.query().collect()} == before
+
+
+def test_compact_with_another_layout_rewrites_whole_table(spark, tmp_path):
+    """A handle whose num_buckets is not the table's compacts by
+    rewriting the whole table in its own layout: every live row once,
+    no root file left beside the new buckets."""
+    path = str(tmp_path / "relayout")
+    plain = ServingTable(spark, path, key="id")
+    plain.apply_batch(_batch(spark, *[(i, "+I", f"k{i}", "v1") for i in range(16)]))
+    plain.apply_batch(_batch(spark, (20, "+U", "k1", "v2"), (21, "-D", "k2", "")))
+    tbl = ServingTable(spark, path, key="id", num_buckets=4)
+    rewritten = tbl.compact()
+    got = sorted((r.id, r.title) for r in tbl.query().collect())
+    assert len(got) == 15 and ("k1", "v2") in got and "k2" not in dict(got)
+    assert rewritten == [0, 1, 2, 3]
+    snap = tbl._latest()
+    assert snap["num_buckets"] == 4 and not snap["runs"] and not snap["files"].get("")
+    assert [r.title for r in tbl.lookup("k1").collect()] == ["v2"]
 
 
 def test_lookup_prunes_to_one_bucket(spark, tmp_path):
@@ -864,17 +883,19 @@ def test_ordering_across_runs_and_compaction(spark, tmp_path):
     assert [r.title for r in tbl.lookup("a").collect()] == ["updated"]
 
 
-def test_random_batches_match_python_last_wins(spark, tmp_path):
+@pytest.mark.parametrize("num_buckets", [0, 4])
+def test_random_batches_match_python_last_wins(spark, tmp_path, num_buckets):
     """Random batches with hot keys, deletes, re-inserts and one
     evolved column, across in-batch folds: after every batch query()
-    and a lookup in every bucket equal a pure-Python last-wins."""
+    and a lookup in every bucket equal a pure-Python last-wins, on the
+    unbucketed table (the root is its one bucket) and a bucketed one."""
     rng = random.Random(11)
-    tbl = ServingTable(spark, str(tmp_path / "rand"), key="id", num_buckets=4)
+    tbl = ServingTable(spark, str(tmp_path / "rand"), key="id", num_buckets=num_buckets)
     keys = [f"k{i}" for i in range(24)]
     probes = {}
     for k in keys:
-        probes.setdefault(_bucket_of(spark, tbl, k), k)
-    assert len(probes) == 4
+        probes.setdefault(_bucket_of(spark, tbl, k) if num_buckets else 0, k)
+    assert len(probes) == max(num_buckets, 1)
     schema = T.StructType(list(CDC_SCHEMA.fields) + [T.StructField("lang", T.StringType())])
     batches, folds = [], 0
     for b in range(12):
@@ -888,10 +909,11 @@ def test_random_batches_match_python_last_wins(spark, tmp_path):
         batches.append(ops)
         rows = [Row(_seq=s, _row_kind=k, id=i, title=t, lang=l) for s, k, i, (t, l) in ops]
         df = spark.createDataFrame(rows, schema)
+        full = tbl._latest()["runs"] if b else {}
         tbl.apply_batch(df if b >= 6 else df.drop("lang"))
-        folds += tbl.commits()[-1]["buckets"] != sorted(
-            int(d.split("=")[1]) for d in tbl._latest()["runs"]
-        )
+        folded = [t for t in tbl.commits()[-1]["buckets"] or () if len(full.get(tbl._dir(t), ())) >= MAX_RUNS]
+        assert not any(tbl._dir(t) in tbl._latest()["runs"] for t in folded)
+        folds += len(folded)
         expected = _last_wins(batches)
         got = {r.id: (r.title, r.asDict().get("lang")) for r in tbl.query().collect()}
         assert got == expected, f"batch {b}"
